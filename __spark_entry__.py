@@ -3685,7 +3685,7 @@ def q_bm25_add_metadata_col(spark, sf_dir):
 
 
 def q_minhash_add_metadata_col(spark, sf_dir):
-    """MinHash evolution (shared add_band_metadata_col): the bare
+    """MinHash evolution (shared _band_index.add_metadata_col): the bare
     even-id index gets lang backfilled onto every band row
     (signatures carried, nothing re-shingled), then serves the same
     where="lang == 'en'" query as minhash_where_query — equality with
@@ -4079,7 +4079,7 @@ def q_bm25_drop_metadata_col(spark, sf_dir):
 def q_minhash_drop_metadata_col(spark, sf_dir):
     """The band-family prune leg (r17): the minhash_where_query index
     built with an extra grade column, dropped via
-    minhash_index_drop_metadata_col (shared drop_band_metadata_cols —
+    minhash_index_drop_metadata_col (shared _band_index.drop_metadata_col —
     signatures carried, nothing re-shingled); post-drop where serving
     equals the build that never stored grade, so the oracle is
     minhash_where_query's SQL verbatim."""

@@ -1,11 +1,13 @@
 """Helpers shared by the persisted-index families (BM25
 ``operators/search.py``, vector-ANN ``operators/ann_index.py``,
-MinHash ``operators/dedup.py``) so the pieces of the on-disk protocol
-that must stay in lockstep have ONE definition. The per-index
-manifest/sweep/compact logic intentionally stays in each module —
-those differ in real ways (terms snapshots, tombstones, the model
-file) — but generation tags and the id-type round-trip are protocol,
-not policy."""
+MinHash ``operators/dedup.py``, SimHash ``operators/simhash_index.py``)
+so the pieces of the on-disk protocol that must stay in lockstep have
+ONE definition. The two band-row families (MinHash, SimHash) also
+share one lifecycle implementation on top of these helpers
+(``operators/_band_index.py``); BM25 and ANN keep their
+manifest/sweep/compact logic in their own modules — those differ in
+real ways (terms snapshots, the model file) — but generation tags and
+the id-type round-trip are protocol, not policy."""
 
 from __future__ import annotations
 
@@ -31,13 +33,10 @@ __all__ = [
     "cached_for_auto",
     "check_store_cols",
     "check_metadata_updates",
-    "update_band_metadata",
     "NO_DEFAULT",
     "check_add_metadata_col",
     "check_drop_metadata_cols",
     "backfill_metadata_rows",
-    "add_band_metadata_col",
-    "drop_band_metadata_cols",
     "resolve_cdc_with_meta",
     "apply_cdc_meta",
     "read_committed",
@@ -718,14 +717,18 @@ def materialize(df):
       (guide §5). Requires ``SparkContext.setCheckpointDir`` (or the
       ``spark.checkpoint.dir`` conf); raises with that instruction
       when unset rather than silently degrading fault tolerance.
+      ``get_spark`` defaults
+      ``spark.cleaner.referenceTracking.cleanCheckpoints=true``, so
+      these per-call checkpoint files are deleted once their
+      DataFrame is garbage-collected instead of piling up for the
+      life of the application.
+
+    A failing read of the mode conf propagates: swallowing it would
+    drop a ``reliable`` session to ``local`` without a word.
     """
-    mode = "local"
-    try:
-        mode = df.sparkSession.conf.get(
-            "spark.parq_tools.materialize.mode", "local"
-        )
-    except Exception:
-        pass
+    mode = df.sparkSession.conf.get(
+        "spark.parq_tools.materialize.mode", "local"
+    )
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is None:
@@ -829,116 +832,6 @@ def check_metadata_updates(updates, id_col: str, store, fn: str):
             "update"
         )
     return upd_cols
-
-
-def update_band_metadata(
-    spark, path: str, updates, *, vs, cur: int, m: dict,
-    params: dict, fn: str,
-):
-    """Metadata-ONLY update shared by the band-row index families
-    (MinHash / SimHash) — the band twin of
-    ``ann_index_update_metadata``: the affected ids' visible band
-    rows are read back (signatures/fingerprints untouched — nothing
-    is re-shingled or re-fingerprinted), their metadata columns
-    replaced, and the rewritten rows committed as one new
-    band-partitioned segment together with a version-scoped tombstone
-    in a single atomic manifest commit. ``updates`` carries the index
-    id column plus any subset of the index's ``store_cols``; one row
-    per id, every id visible. Returns ``{"updated": n, "version":
-    v}``. The two families' manifests share this commit shape
-    exactly, so ONE implementation serves both."""
-    import json
-    from functools import reduce
-
-    from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
-
-    id_col = params["id_col"]
-    store = params.get("store_cols", [])
-    upd_cols = check_metadata_updates(updates, id_col, store, fn)
-    upd, _st = eager_stats(
-        updates.select(
-            id_col, *[F.col(c).alias(f"_upd_{c}") for c in upd_cols]
-        ),
-        n=F.count(F.lit(1)),
-    )
-    n_upd = int(_st["n"])
-    if n_upd == 0:
-        return {"updated": 0, "version": cur}
-    if upd.select(id_col).distinct().count() < n_upd:
-        raise ValueError(
-            f"{fn}: duplicate {id_col} row(s) in updates — one "
-            "metadata row per id"
-        )
-
-    fs = vs.fs
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-    batches = delete_batches(spark, path, m)
-    rows = (
-        reduce(
-            DataFrame.unionByName,
-            [visible_scan(spark, path, s, batches, id_col) for s in live],
-        )
-        if live
-        else None
-    )
-    if rows is None:
-        raise ValueError(
-            f"{fn}: none of the {n_upd} id(s) are visible in the "
-            "(empty) index"
-        )
-    check_self_exclusion_types(
-        updates.schema[id_col].dataType,
-        rows.schema[id_col].dataType,
-        f"{fn}: updates",
-        remedy="Cast the update id column to the indexed id type.",
-    )
-    affected = rows.join(upd, on=id_col)
-    out_cols = [
-        F.col(f"_upd_{c}").cast(rows.schema[c].dataType).alias(c)
-        if c in upd_cols
-        else F.col(c)
-        for c in rows.columns
-    ]
-    seg = tag(cur + 1, "seg")
-    affected.select(*out_cols).write.mode(
-        "errorifexists"
-    ).partitionBy("band").parquet(f"{path}/{seg}")
-    # visibility check from the WRITTEN segment's band-0 directory
-    # (every indexed doc has one row per band — partition-pruned,
-    # O(affected)); failure leaves only an invisible orphan
-    n_found = (
-        read_committed(spark, f"{path}/{seg}")
-        .filter(F.col("band") == 0)
-        .select(id_col)
-        .distinct()
-        .count()
-        if fs.list_files(f"{path}/{seg}")
-        else 0
-    )
-    if n_found < n_upd:
-        raise ValueError(
-            f"{fn}: {n_upd - n_found} of {n_upd} requested id(s) are "
-            "not visible in the index (typo, never indexed, or "
-            "deleted) — refusing a partial update"
-        )
-    del_dir = tag(cur + 1, "del")
-    upd.select(id_col).write.mode("errorifexists").parquet(
-        f"{path}/{del_dir}"
-    )
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                **m,
-                "version": cur + 1,
-                "segments": m["segments"] + [seg],
-                "deletes": m.get("deletes", [])
-                + [{"dir": del_dir, "upto": cur}],
-            }
-        ),
-    )
-    return {"updated": n_upd, "version": cur + 1}
 
 
 #: Sentinel distinguishing "no default supplied" from an explicit
@@ -1128,156 +1021,6 @@ def backfill_metadata_rows(
         )
     out = out.drop("_has")
     return out, n_vals
-
-
-def visible_band_rows(spark, path: str, m: dict, id_col: str, fn: str,
-                      fs):
-    """Every VISIBLE band row of a band-partitioned index (MinHash /
-    SimHash), tombstones folded — the read side both evolution legs
-    (backfill / prune) share; ``fs`` is the caller's ``vs.fs`` (every
-    caller already holds one). Raises when nothing is visible:
-    committing a rewrite of zero rows would make a data-less
-    directory the SOLE segment and break schema inference for every
-    later query."""
-    from functools import reduce
-
-    from pyspark.sql import DataFrame
-
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-    if not live:
-        raise ValueError(
-            f"{fn}: the index holds no visible rows — nothing to "
-            "rewrite"
-        )
-    batches = delete_batches(spark, path, m)
-    rows = reduce(
-        DataFrame.unionByName,
-        [visible_scan(spark, path, s, batches, id_col) for s in live],
-    )
-    if not rows.take(1):
-        raise ValueError(
-            f"{fn}: the index holds no visible rows — nothing to "
-            "rewrite"
-        )
-    return rows
-
-
-def commit_band_rewrite(
-    out, path: str, *, vs, cur: int, m: dict, params: dict,
-    store_cols: list, id_col: str, task_splits=1,
-):
-    """Write rewritten band rows as ONE fresh segment and commit a
-    COMPACTION-shaped manifest (``segments=[new]``, ``deletes=[]``)
-    whose ``params.store_cols`` becomes ``store_cols`` in the SAME
-    atomic commit — the shared tail of the band families' evolution
-    legs (backfill extends the list, prune shrinks it). Serving-time
-    ``where=`` validation and every subsequent ingest's
-    ``check_store_cols`` see the new list the instant it is
-    queryable, never before. Old segments stay on disk for the
-    reader-grace cycle like any compaction. Returns the new
-    version."""
-    import json
-
-    seg = tag(cur + 1, "seg")
-    with cached_for_auto(out, task_splits) as out_c:
-        write_salted_segment(
-            out_c, f"{path}/{seg}", "band", [id_col], id_col,
-            resolve_task_splits(task_splits, out_c, "band", "task_splits"),
-        )
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                **m,
-                "version": cur + 1,
-                "segments": [seg],
-                "deletes": [],
-                "params": {**params, "store_cols": store_cols},
-            }
-        ),
-    )
-    return cur + 1
-
-
-def add_band_metadata_col(
-    spark, path: str, values, default, *, vs, cur: int, m: dict,
-    params: dict, reserved, fn: str, task_splits=1,
-):
-    """Backfill NEW metadata column(s) over a band-row index
-    (MinHash / SimHash) — the band twin of
-    ``ann_index_add_metadata_col`` and the evolution leg of the
-    metadata lifecycle: every VISIBLE band row is rewritten with the
-    extra column(s) (signatures/fingerprints carried as stored
-    values — nothing re-shingled or re-fingerprinted) and committed
-    as ONE fresh segment whose manifest extends ``params.store_cols``
-    in the SAME atomic commit. ``values`` may carry k new columns —
-    they land in ONE rewrite (``default`` a shared value or a
-    per-column dict), because the O(index) rewrite is the entire cost
-    of evolution and must never be paid per column.
-
-    The commit is COMPACTION-shaped (``segments=[new]``,
-    ``deletes=[]``), not the update path's segment+tombstone shape:
-    a backfill touches every row by definition, and tombstoning the
-    whole index would bolt a full-index anti-join onto every query
-    until the next fold. Pending tombstones fold into the rewrite
-    (each segment anti-joins only the batches covering its version),
-    old segments stay on disk for the reader-grace cycle like any
-    compaction. Cost shape at 100 TB: one id-lookup join plus one
-    index-sized shuffle keyed by band (the write's own partitioning;
-    ``task_splits`` salts it like the families' ingest writes) — the
-    irreducible cost of an O(index) schema evolution, paid once
-    instead of on every serving query."""
-    from pyspark.sql import functions as F
-
-    id_col = params["id_col"]
-    store = list(params.get("store_cols", []))
-    new_cols = check_add_metadata_col(
-        values, id_col, store, reserved, fn, default=default
-    )
-    rows = visible_band_rows(spark, path, m, id_col, fn, vs.fs)
-    # one row per id per band — band 0 alone is exact membership at
-    # 1/bands of the scan (the delete guard's trick)
-    coverage = rows.filter(F.col("band") == 0).select(id_col)
-    out, _ = backfill_metadata_rows(
-        rows, values, id_col, new_cols, default, fn,
-        coverage_ids=coverage,
-    )
-    v = commit_band_rewrite(
-        out, path, vs=vs, cur=cur, m=m, params=params,
-        store_cols=store + new_cols, id_col=id_col,
-        task_splits=task_splits,
-    )
-    return {"added": new_cols, "version": v}
-
-
-def drop_band_metadata_cols(
-    spark, path: str, cols, *, vs, cur: int, m: dict,
-    params: dict, fn: str, task_splits=1,
-):
-    """Drop stored metadata column(s) from a band-row index
-    (MinHash / SimHash) — the PRUNE leg of the metadata lifecycle,
-    the inverse of :func:`add_band_metadata_col`: every VISIBLE band
-    row is rewritten WITHOUT the column(s) (signatures/fingerprints
-    carried) and committed as ONE compaction-shaped segment whose
-    manifest shrinks ``params.store_cols`` atomically. Until this
-    runs, a mistakenly added or superseded column pays its bytes on
-    every band scan forever. Dropping the last stored column is
-    legal (the index reverts to store_cols-less); serving ``where=``
-    against a dropped column then fails with the standard
-    unknown-column error — whether a streaming sink's admission
-    scope still references it is undetectable here, so that contract
-    is documented rather than guessed."""
-    store = list(params.get("store_cols", []))
-    cols = check_drop_metadata_cols(cols, store, fn)
-    id_col = params["id_col"]
-    rows = visible_band_rows(spark, path, m, id_col, fn, vs.fs)
-    out = rows.drop(*cols)
-    v = commit_band_rewrite(
-        out, path, vs=vs, cur=cur, m=m, params=params,
-        store_cols=[c for c in store if c not in cols], id_col=id_col,
-        task_splits=task_splits,
-    )
-    return {"dropped": cols, "version": v}
 
 
 def resolve_cdc_with_meta(changes, id_col: str, op_col: str, seq_col):

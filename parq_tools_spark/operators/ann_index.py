@@ -153,8 +153,8 @@ def _ann_delete_batches(spark, path: str, m: dict, id_col: str) -> list:
 
 
 def _ann_visible_ids(spark, path: str, m: dict, id_col: str):
-    """Visible vec ids (the ANN twin of ``_minhash_visible_ids`` /
-    ``_sh_visible_ids``): union of tombstone-folded per-segment id
+    """Visible vec ids (the ANN twin of the band families'
+    ``_band_index.visible_ids``): union of tombstone-folded per-segment id
     scans, or None on an index with no live segment files. NOT
     de-duplicated — callers that join against a small batch first
     keep the distinct on the post-join (batch-sized) side."""

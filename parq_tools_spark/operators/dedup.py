@@ -36,7 +36,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from parq_tools_spark.operators import _index_common as _CM
+from parq_tools_spark.operators import _band_index as _BI
 from parq_tools_spark.operators._index_common import materialize as _mat
 
 __all__ = [
@@ -1199,32 +1199,30 @@ def minhash_pairs_between(
 
 
 _PARAMS_FILE = "_minhash_params.json"
-_INDEX_MARKER = "_index_manifest.json"
 
 
-def _index_vs(spark, path: str):
-    from parq_tools_spark.sources.statefs import VersionedState
+def _minhash_band_rows(df, p: dict, text_col: str, meta_cols) -> DataFrame:
+    return banded_minhash(
+        df, p["id_col"], text_col, p["num_hashes"], p["bands"], p["k"],
+        p["hash_family"], meta_cols=meta_cols,
+    )
 
-    return VersionedState(spark, path, _INDEX_MARKER)
 
+def _minhash_manifest_params(spark, path: str, vs, m) -> dict:
+    """The MinHash params resolver. Params ride IN the manifest since
+    round 9 (atomic with the segment list); indexes written earlier
+    fall back to the params sidecar (safe there — the sidecar was
+    written once at build and never changed).
 
-def _index_manifest(spark, path: str):
-    """``(vs, current_version, segments)`` for an index at ``path`` —
-    segments are the manifest-listed immutable data directories
-    (relative names). Only COMMITTED manifests are visible: a crashed
-    write/add/compact leaves at worst an orphan segment directory no
-    manifest references (swept by the next compaction).
-
-    A pre-manifest LEGACY layout (``band=`` directories at the root,
-    written by the old rename-in-place protocol) is refused LOUDLY —
-    silently ignoring those rows would let every past document's
-    near-duplicates through; rebuild with :func:`minhash_index_write`
-    over the original corpus to migrate."""
+    With nothing committed (``m is None``), a pre-manifest LEGACY
+    layout (``band=`` directories at the root, written by the old
+    rename-in-place protocol) is refused LOUDLY — silently ignoring
+    those rows would let every past document's near-duplicates
+    through; rebuild with :func:`minhash_index_write` over the
+    original corpus to migrate."""
     import json
 
-    vs = _index_vs(spark, path)
-    cur = vs.current()
-    if cur is None:
+    if m is None:
         if any(
             is_dir and name.startswith("band=")
             for name, is_dir, _ in vs.fs.list_status(path)
@@ -1234,79 +1232,40 @@ def _index_manifest(spark, path: str):
                 "layout (no committed manifest); rebuild it with "
                 "minhash_index_write to migrate"
             )
-        raise ValueError(
-            f"no committed minhash index at {path}; build one with "
-            "minhash_index_write"
-        )
-    m = json.loads(vs.read_marker(cur))
-    return vs, cur, list(m["segments"])
+        return None
+    if "params" in m:
+        return m["params"]
+    return json.loads(vs.fs.read_text(f"{path}/{_PARAMS_FILE}"))
+
+
+#: The MinHash band-row family: ``(id, *store_cols, signature, band,
+#: bhash)`` rows under ``_index_manifest.json`` commits.
+BAND_FAMILY = _BI.BandFamily(
+    family="minhash",
+    module=__name__,
+    marker="_index_manifest.json",
+    reserved=("signature", "band", "bhash"),
+    band_rows=_minhash_band_rows,
+    params=_minhash_manifest_params,
+    dup_note=" (a duplicate would append two signature sets for one id)",
+)
 
 
 def _index_manifest_full(spark, path: str, version=None):
-    """``(vs, current_version, manifest_dict)`` — the single-read
-    resolution point for paths that need params AND segments from the
-    SAME committed version (resolving them separately could tear
-    across a concurrent rebuild-with-new-params commit). One marker
-    read total (an object-store GET each on s3a), not two.
-    ``version=`` resolves a retained historical manifest instead (the
-    shared index time-travel contract)."""
-    import json
-
-    vs = _index_vs(spark, path)
-    if version is not None:
-        from parq_tools_spark.operators._index_common import (
-            resolve_manifest,
-        )
-
-        cur, m = resolve_manifest(
-            vs,
-            path,
-            version,
-            what="minhash index",
-            build_hint="; build one with minhash_index_write",
-        )
-        return vs, cur, m
-    cur = vs.current()
-    if cur is None:
-        # delegate the legacy-layout / no-index error messages
-        _index_manifest(spark, path)
-    return vs, cur, json.loads(vs.read_marker(cur))
+    """``(vs, current_version, manifest_dict)`` of the MinHash index
+    (``version=`` resolves a retained historical manifest)."""
+    return _BI.manifest(BAND_FAMILY, spark, path, version)
 
 
-def _manifest_params(spark, path: str, m: dict) -> dict:
-    """The signature params of a resolved manifest: carried IN the
-    manifest since round 9 (atomic with the segment list); indexes
-    written earlier fall back to the params sidecar (safe there — the
-    sidecar was written once at build and never changed)."""
-    import json
-
-    from parq_tools_spark.sources.statefs import StateFS
-
-    if "params" in m:
-        return m["params"]
-    return json.loads(
-        StateFS(spark, path).read_text(f"{path}/{_PARAMS_FILE}")
-    )
+def _index_manifest(spark, path: str):
+    """``(vs, current_version, segments)`` — only COMMITTED manifests
+    are visible; a legacy pre-manifest layout is refused loudly."""
+    vs, cur, m = _index_manifest_full(spark, path)
+    return vs, cur, list(m["segments"])
 
 
-def minhash_index_stats(
-    spark, path: str, version=None
-) -> dict:
-    """The resolved manifest's statistics — the staleness-contract
-    inspection point the other three families already expose
-    (``bm25_index_stats`` / ``ann_index_stats`` /
-    ``simhash_index_stats``); ``version=`` inspects a retained
-    historical version (the shared index time-travel contract). The
-    MinHash manifest carries no row counter (band rows are
-    per-document-per-band, not per-document), so the dict reports
-    structural signals only."""
-    _, cur, m = _index_manifest_full(spark, path, version)
-    return {
-        "version": cur,
-        "params": _manifest_params(spark, path, m),
-        "n_segments": len(m["segments"]),
-        "pending_delete_batches": len(m.get("deletes", [])),
-    }
+def _minhash_index_params(spark, path: str) -> dict:
+    return _BI.resolve(BAND_FAMILY, spark, path)[3]
 
 
 def minhash_index_is_committed(spark, path: str) -> bool:
@@ -1314,15 +1273,7 @@ def minhash_index_is_committed(spark, path: str) -> bool:
     bootstrap gate (a params sidecar alone proves nothing: a crash
     between the sidecar write and the manifest commit must read as
     "no index yet" so the writer retries, never as a wedge)."""
-    return _index_vs(spark, path).current() is not None
-
-
-def _new_segment_name(version: int) -> str:
-    # ONE tag definition across the index families (_index_common):
-    # seg_version()-based tombstone scoping parses this format
-    from parq_tools_spark.operators._index_common import tag
-
-    return tag(version, "seg")
+    return _BI.committed(BAND_FAMILY, spark, path)
 
 
 def minhash_index_write(
@@ -1345,7 +1296,8 @@ def minhash_index_write(
     On-disk protocol (``sources/statefs.py`` — the same
     versioned-manifest commit the rollup state and CDC snapshots
     use, so the index lives equally on ``file:``, ``hdfs:`` or
-    ``s3a:``):
+    ``s3a:``; the lifecycle ops are shared with the SimHash family,
+    ``operators/_band_index.py``):
 
     - band rows land in immutable SEGMENT directories
       (``seg-<version>-<tag>/band=<b>/...``), one per write/add;
@@ -1354,7 +1306,8 @@ def minhash_index_write(
       reader may see — data of a crashed or in-flight operation is
       invisible, never half-read, and nothing ever renames data in
       place (object-store-clean: the commit is one marker PUT);
-    - a params sidecar pins the signature scheme.
+    - a params sidecar pins the signature scheme for pre-round-9
+      readers.
 
     ``store_cols`` persists the named per-document metadata columns
     (e.g. ``lang``, ``license``) ON every band row — carried through
@@ -1377,57 +1330,14 @@ def minhash_index_write(
     """
     import json
 
-    from parq_tools_spark.sources.statefs import StateFS
-
-    if keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-    from parq_tools_spark.operators._index_common import (
-        check_store_cols,
-    )
-
-    store_cols = list(store_cols)
-    # text_col is reserved too: storing the raw document text on
-    # EVERY band row is bands x text bytes of silent index bloat
-    reserved = {"signature", "band", "bhash", id_col, text_col}
-    bad = [c for c in store_cols if c in reserved]
-    if bad:
-        raise ValueError(
-            f"store_cols {bad} collide with the band-row schema's "
-            f"reserved columns ({sorted(reserved)})"
-        )
-    check_store_cols(df, store_cols, "minhash_index_write")
-    spark = df.sparkSession
-    fs = StateFS(spark, path)
-    vs = _index_vs(spark, path)
-    cur = vs.current()
-    if cur is None:
+    def _reset_legacy(vs) -> None:
         # legacy band= dirs from the pre-manifest layout: no manifest
         # ever committed them, so the rebuild-migration resets them
         # (markers like the streaming checkpoint sidecar are left)
-        for entry, is_dir, _ in fs.list_status(path):
+        for entry, is_dir, _ in vs.fs.list_status(path):
             if is_dir and entry.startswith("band="):
-                fs.delete(f"{path}/{entry}")
-    else:
-        # sweep at cycle START: state superseded LAST cycle goes now,
-        # never the live generation (reader grace). Retention follows
-        # the PREVIOUS generation's policy; this rebuild's
-        # keep_versions governs from its own commit forward.
-        from parq_tools_spark.operators._index_common import retention
+                vs.fs.delete(f"{path}/{entry}")
 
-        vs.clean_stale(
-            cur,
-            keep_versions=retention(json.loads(vs.read_marker(cur))),
-        )
-        _sweep_index_orphans(fs, path, vs, cur)
-    new = (cur or 0) + 1
-    banded = banded_minhash(
-        df, id_col, text_col, num_hashes, bands, k, hash_family,
-        meta_cols=store_cols,
-    )
-    seg = _new_segment_name(new)
-    banded.write.mode("errorifexists").partitionBy("band").parquet(
-        f"{path}/{seg}"
-    )
     params = {
         "id_col": id_col,
         "text_col": text_col,
@@ -1436,12 +1346,9 @@ def minhash_index_write(
         "k": k,
         "hash_family": hash_family,
         "keep_versions": keep_versions,
-        "store_cols": store_cols,
+        "store_cols": list(store_cols),
     }
-    vs.commit(
-        new,
-        json.dumps({"version": new, "segments": [seg], "params": params}),
-    )
+    _BI.write(BAND_FAMILY, df, path, params, on_fresh=_reset_legacy)
     # sidecar kept for pre-round-9 readers, written AFTER the commit:
     # the manifest copy is authoritative (atomic with the segment
     # list), and on a LEGACY index (old manifest without params, read
@@ -1450,621 +1357,25 @@ def minhash_index_write(
     # the NEW signature params — garbage matches with no error. A
     # crash in between leaves the sidecar stale, which no reader of a
     # params-carrying manifest ever consults.
-    fs.write_text(f"{path}/{_PARAMS_FILE}", json.dumps(params))
-
-
-def minhash_index_maybe_compact(
-    spark,
-    path: str,
-    max_segments: int = 16,
-    max_delete_batches: int = 4,
-) -> bool:
-    """Stats-driven :func:`minhash_index_compact` (the shared
-    :func:`~parq_tools_spark.operators._index_common.maybe_compact`
-    trigger): rewrite only when the live manifest references more
-    than ``max_segments`` segments or more than
-    ``max_delete_batches`` tombstone batches are pending (each
-    pending batch costs one anti-join per query; the MinHash manifest
-    carries no row counter, so the batch bound stands in for a
-    tombstone fraction) — otherwise O(manifest) and do nothing. When
-    triggered, compaction runs with ``force=True`` so the
-    breach actually folds the segment list instead of re-triggering
-    every batch. Returns True iff a compaction ran."""
-    from parq_tools_spark.operators._index_common import maybe_compact
-
-    return maybe_compact(
-        spark,
-        path,
-        _INDEX_MARKER,
-        lambda: minhash_index_compact(spark, path, force=True),
-        max_segments=max_segments,
-        max_delete_batches=max_delete_batches,
-    )
-
-
-def minhash_index_compact(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    min_files_per_band: int = 8,
-    force: bool = False,
-) -> dict:
-    """Compact an index after repeated :func:`minhash_index_add`
-    appends.
-
-    Each add commits one small segment, so after K ingests query-scan
-    cost creeps up with file COUNT (task scheduling + footer reads),
-    not data size. When any band's file count across the manifest's
-    segments exceeds both ``min_files_per_band`` and its
-    ``ceil(bytes / target_file_bytes)`` target, the index is rewritten
-    into ONE fresh segment — per band, a read of that band's files
-    and a ``coalesce`` write (no shuffle: the band is the directory),
-    embarrassingly parallel across bands — and a new manifest is
-    committed pointing at it. On a table format (Delta/Iceberg) this
-    whole function is the built-in OPTIMIZE; plain parquet does it by
-    hand.
-
-    Crash safety needs NO repair path: the rewrite goes into a new
-    segment directory that no reader can see until the manifest
-    commit (exclusive marker create, the VersionedState protocol), so
-    an interrupted compaction leaves only an orphan directory —
-    queries keep serving the old manifest, never raise, and the next
-    compaction sweeps the orphan. There is no rename of live data
-    anywhere, so the protocol behaves identically on object stores.
-    Concurrent queries during compaction read whichever manifest they
-    resolved (the superseded version survives one further cycle —
-    ``clean_stale`` grace). Appends must not race compaction (the
-    single maintenance-writer slot both already share); a racing
-    committer fails loudly on the exclusive marker.
-
-    Returns ``{band: (files_before, files_after)}`` for bands whose
-    file count dropped. ``{}`` means no band's file count shrank —
-    with NO tombstones pending that also means nothing was rewritten;
-    with tombstones pending a rewrite ALWAYS runs and commits (the
-    fold is the point), even when per-band file counts are unchanged,
-    so check the manifest version (``_index_manifest``) rather than
-    this map to detect whether a new generation committed.
-    """
-    import json
-    import math
-
     from parq_tools_spark.sources.statefs import StateFS
 
-    fs = StateFS(spark, path)
-    vs, cur, m = _index_manifest_full(spark, path)
-    segments = list(m["segments"])
-    # sweep at cycle START (the rollup-state pattern): versions and
-    # segments superseded LAST cycle go now, so in-flight readers of
-    # the previous manifest always get a full cycle to finish
-    from parq_tools_spark.operators._index_common import retention
-
-    vs.clean_stale(cur, keep_versions=retention(m))
-    _sweep_index_orphans(fs, path, vs, cur)
-
-    # listing-only trigger: per-band file count + bytes across segments
-    per_band: dict = {}
-    for seg in segments:
-        for entry, is_dir, _ in fs.list_status(f"{path}/{seg}"):
-            if not (is_dir and entry.startswith("band=")):
-                continue
-            b = int(entry.split("=", 1)[1])
-            files = [
-                size
-                for n, d, size in fs.list_status(f"{path}/{seg}/{entry}")
-                if not d and n.endswith(".parquet")
-            ]
-            cnt, tot = per_band.get(b, (0, 0))
-            per_band[b] = (cnt + len(files), tot + sum(files))
-    targets = {
-        b: max(1, math.ceil(tot / target_file_bytes))
-        for b, (cnt, tot) in per_band.items()
-    }
-    # pending tombstones (minhash_index_delete) force a rewrite
-    # regardless of file counts — folding them into the band rows
-    # (and clearing the list) bounds the query-time anti-join side
-    from functools import reduce as _reduce
-
-    from parq_tools_spark.operators._index_common import (
-        delete_batches,
-        visible_scan,
-    )
-
-    batches = delete_batches(spark, path, m)
-    if not force and not batches and not any(
-        cnt > min_files_per_band and cnt > targets[b]
-        for b, (cnt, tot) in per_band.items()
-    ):
-        return {}
-
-    id_col = _manifest_params(spark, path, m)["id_col"]
-    new_seg = _new_segment_name(cur + 1)
-
-    def _rewrite_band(b) -> None:
-        if not batches:
-            srcs = [
-                f"{path}/{seg}/band={b}"
-                for seg in segments
-                if fs.exists(f"{path}/{seg}/band={b}")
-            ]
-            if not srcs:
-                return
-            # per-band read -> coalesce -> write: the partition column
-            # is the directory name, so the rewrite needs no shuffle
-            from parq_tools_spark.operators._index_common import (
-                read_committed,
-            )
-
-            band_df = read_committed(spark, *srcs)
-        else:
-            # per-segment reads so each segment folds only the
-            # tombstones whose upto covers its version
-            parts = [
-                visible_scan(spark, path, seg, batches, id_col).filter(
-                    F.col("band") == b
-                )
-                for seg in segments
-                if fs.exists(f"{path}/{seg}/band={b}")
-            ]
-            if not parts:
-                return
-            band_df = _reduce(DataFrame.unionByName, parts).drop("band")
-        band_df.coalesce(targets[b]).write.mode(
-            "errorifexists"
-        ).parquet(f"{path}/{new_seg}/band={b}")
-
-    # independent per-band rewrites overlap from a small thread pool
-    # (guide §2.6); failures propagate BEFORE the commit
-    from parq_tools_spark.operators._index_common import run_overlapped
-
-    run_overlapped(_rewrite_band, sorted(per_band))
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                "version": cur + 1,
-                "segments": [new_seg],
-                "deletes": [],
-                **(
-                    {"params": m["params"]} if "params" in m else {}
-                ),
-            }
-        ),
-    )
-
-    compacted = {}
-    for b, (cnt, tot) in per_band.items():
-        n_after = sum(
-            1
-            for n, d, _ in fs.list_status(f"{path}/{new_seg}/band={b}")
-            if not d and n.endswith(".parquet")
-        )
-        if n_after < cnt:
-            compacted[b] = (cnt, n_after)
-    return compacted
-
-
-def _sweep_index_orphans(fs, path: str, vs, current: int) -> None:
-    """Delete segment directories no SURVIVING manifest references —
-    leftovers of crashed writes/adds/compactions and of superseded
-    versions past their reader grace. Runs only in the maintenance
-    slot (compaction), mirroring ``clean_stale``'s one-cycle grace:
-    segments of any still-present committed version are kept."""
-    import json
-
-    from parq_tools_spark.operators._index_common import delete_entries
-
-    referenced = set()
-    for n, committed in vs.versions():
-        if committed:
-            mm = json.loads(vs.read_marker(n))
-            referenced.update(mm["segments"])
-            referenced.update(e["dir"] for e in delete_entries(mm))
-    for entry, is_dir, _ in fs.list_status(path):
-        if (
-            is_dir
-            and entry.startswith(("seg-", "del-"))
-            and entry not in referenced
-        ):
-            fs.delete(f"{path}/{entry}")
-
-
-def _minhash_index_params(spark, path: str) -> dict:
-    _, _, m = _index_manifest_full(spark, path)
-    return _manifest_params(spark, path, m)
-
-
-def minhash_index_add(
-    df: DataFrame, path: str, text_col: str = "text"
-) -> None:
-    """Append a new batch's band rows to an existing index (after
-    deduping the batch with :func:`minhash_index_query` — the index
-    does not check for id collisions).
-
-    The append is ATOMIC: the batch's band rows land in a fresh
-    segment directory, then a new manifest version naming
-    ``old segments + [new]`` commits via exclusive marker create. A
-    crash mid-write leaves an invisible orphan (swept by compaction);
-    a concurrent committer fails loudly instead of silently dropping
-    either append."""
-    import json
-
-    spark = df.sparkSession
-    vs, cur, m = _index_manifest_full(spark, path)
-    p = _manifest_params(spark, path, m)
-    segments = list(m["segments"])
-    from parq_tools_spark.operators._index_common import (
-        check_store_cols,
-        retention,
-    )
-
-    vs.clean_stale(cur, keep_versions=retention(m))
-    check_store_cols(
-        df, p.get("store_cols", []), "minhash_index_add"
-    )
-    banded = banded_minhash(
-        df,
-        p["id_col"],
-        text_col,
-        p["num_hashes"],
-        p["bands"],
-        p["k"],
-        p["hash_family"],
-        meta_cols=p.get("store_cols", []),
-    )
-    seg = _new_segment_name(cur + 1)
-    banded.write.mode("errorifexists").partitionBy("band").parquet(
-        f"{path}/{seg}"
-    )
-    # {**m} carries every untouched manifest field forward — params
-    # AND any pending tombstone list (dropping the latter would
-    # resurrect deleted docs' band rows)
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                **m,
-                "version": cur + 1,
-                "segments": segments + [seg],
-                "params": p,
-            }
-        ),
+    StateFS(df.sparkSession, path).write_text(
+        f"{path}/{_PARAMS_FILE}", json.dumps(params)
     )
 
 
-def minhash_index_delete(
-    spark, path: str, ids, _verified: bool = False
-) -> dict:
-    """Delete documents' band rows from the index by id —
-    VERSION-SCOPED tombstones, the same LSM protocol as the BM25/ANN
-    indexes (``operators/_index_common.py``): the ids land in an
-    immutable ``del-`` directory recorded with the version it was
-    committed at; :func:`minhash_index_query` anti-joins each
-    segment against only the tombstones covering its version, so a
-    later :func:`minhash_index_add` of the same id is immediately
-    visible with no compaction in between. The next compaction folds
-    tombstones into the rewritten band rows and clears the list.
-
-    Why this matters for DEDUP specifically: a stale band row is not
-    just wasted work — a new document colliding with a REMOVED
-    corpus doc's bands gets verified against its signature and
-    dropped as a duplicate of content that no longer exists, so
-    unremoved deletions silently shrink the corpus.
-
-    Every id must be currently visible (every indexed doc has band
-    rows, so membership via the band rows is exact); missing ids
-    raise. Returns ``{"deleted": n, "version": v}``."""
-    import json
-    from functools import reduce
-
-    from pyspark.sql import types as T
-
-    from parq_tools_spark.operators._index_common import (
-        delete_batches,
-        tag,
-        visible_scan,
-    )
-
-    vs, cur, m = _index_manifest_full(spark, path)
-    p = _manifest_params(spark, path, m)
-    id_col = p["id_col"]
-    from parq_tools_spark.operators._index_common import retention
-
-    vs.clean_stale(cur, keep_versions=retention(m))
-    _sweep_index_orphans(vs.fs, path, vs, cur)
-
-    fs = vs.fs
-    live = [
-        s for s in m["segments"] if fs.list_files(f"{path}/{s}")
-    ]
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
-    else:
-        # id type from the live band rows (the minhash manifest
-        # carries no id_type field); an empty index has nothing to
-        # delete and the guard below raises for any requested id
-        from parq_tools_spark.operators._index_common import (
-            read_committed,
-        )
-
-        id_type = (
-            read_committed(spark, f"{path}/{live[0]}").schema[
-                id_col
-            ].dataType
-            if live
-            else T.LongType()
-        )
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids],
-            T.StructType([T.StructField(id_col, id_type)]),
-        ).distinct()
-    from parq_tools_spark.operators._index_common import eager_stats
-
-    ids_df, _st = eager_stats(ids_df, n=F.count(F.lit(1)))
-    n_del = int(_st["n"])
-    if n_del == 0:
-        return {"deleted": 0, "version": cur}
-
-    batches = delete_batches(spark, path, m)
-    n_found = n_del if _verified else 0
-    if live and not _verified:
-        # _verified=True is the upsert/apply_cdc fast path: the caller
-        # just derived ``ids`` FROM the visible band rows, so
-        # re-scanning to prove visibility would read band 0 twice.
-        # Every indexed doc has exactly one row PER BAND, so a single
-        # band (partition-pruned to one directory per segment) gives
-        # exact membership at 1/bands of the scan
-        n_found = (
-            reduce(
-                DataFrame.unionByName,
-                [
-                    visible_scan(spark, path, s, batches, id_col)
-                    .filter(F.col("band") == 0)
-                    .select(id_col)
-                    for s in live
-                ],
-            )
-            .join(F.broadcast(ids_df), on=id_col)
-            .distinct()
-            .count()
-        )
-    if n_found < n_del:
-        raise ValueError(
-            f"minhash_index_delete: {n_del - n_found} of {n_del} "
-            "requested id(s) are not visible in the index (typo, never "
-            "indexed, or already deleted)"
-        )
-
-    del_dir = tag(cur + 1, "del")
-    ids_df.write.mode("errorifexists").parquet(f"{path}/{del_dir}")
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                **m,
-                "version": cur + 1,
-                "deletes": m.get("deletes", [])
-                + [{"dir": del_dir, "upto": cur}],
-            }
-        ),
-    )
-    return {"deleted": n_del, "version": cur + 1}
-
-
-def _minhash_visible_ids(spark, path: str, m: dict, id_col: str):
-    """DISTINCT visible doc ids, read from band 0 only (every indexed
-    doc has exactly one row per band, so one partition-pruned band
-    directory per segment gives exact membership at 1/bands of the
-    scan) — the same relation the delete guard keys on."""
-    from functools import reduce
-
-    from parq_tools_spark.operators._index_common import (
-        delete_batches,
-        visible_scan,
-    )
-
-    fs = _index_vs(spark, path).fs
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-    if not live:
-        return None
-    batches = delete_batches(spark, path, m)
-    return reduce(
-        DataFrame.unionByName,
-        [
-            visible_scan(spark, path, s, batches, id_col)
-            .filter(F.col("band") == 0)
-            .select(id_col)
-            for s in live
-        ],
-    ).distinct()
-
-
-def minhash_index_upsert(
-    df: DataFrame, path: str, text_col: str = "text", _visible_ids=None
-) -> dict:
-    """Insert-or-replace a batch of documents: ids already visible
-    are tombstoned (one :func:`minhash_index_delete` commit,
-    visibility pre-verified from the band rows), then the whole
-    batch's band rows append (:func:`minhash_index_add`) — the
-    version-scoped tombstones make the re-added rows immediately
-    visible with no compaction in between, the same O(batch) upsert
-    contract as the BM25/ANN indexes. ``_visible_ids`` is the
-    apply_cdc fast path: a pre-materialized superset of the batch's
-    visible ids, so the CDC path never scans band 0 twice per batch.
-    Returns ``{"updated": u, "inserted": i, "version": v}``."""
-    spark = df.sparkSession
-    vs, cur, m = _index_manifest_full(spark, path)
-    p = _manifest_params(spark, path, m)
-    id_col = p["id_col"]
-    # batch size + id-uniqueness in ONE aggregate job (was two)
-    row = df.agg(
-        F.count(F.lit(1)), F.countDistinct(F.col(id_col))
-    ).first()
-    n_rows, n_batch = int(row[0]), int(row[1])
-    ids_df = df.select(F.col(id_col)).distinct()
-    if n_batch < n_rows:
-        raise ValueError(
-            f"minhash_index_upsert: batch carries {n_rows - n_batch} "
-            f"duplicate {id_col} row(s) — one document per id (a "
-            "duplicate would append two signature sets for one id)"
-        )
-    visible = (
-        _visible_ids
-        if _visible_ids is not None
-        else _minhash_visible_ids(spark, path, m, id_col)
-    )
-    updated = 0
-    if visible is not None:
-        from parq_tools_spark.operators._index_common import (
-            eager_stats,
-        )
-
-        existing, _est = eager_stats(
-            visible.join(F.broadcast(ids_df), on=id_col).distinct(),
-            n=F.count(F.lit(1)),
-        )
-        updated = int(_est["n"])
-        if updated:
-            minhash_index_delete(spark, path, existing, _verified=True)
-    minhash_index_add(df, path, text_col=text_col)
-    return {
-        "updated": updated,
-        "inserted": n_batch - updated,
-        "version": _index_vs(spark, path).current(),
-    }
-
-
-def minhash_index_apply_cdc(
-    spark,
-    path: str,
-    changes: DataFrame,
-    op_col: str = "op",
-    seq_col: Optional[str] = None,
-    text_col: str = "text",
-) -> dict:
-    """Apply a CDC batch (``op_col`` in 'I'/'U'/'D'/'M', optional
-    ``seq_col``) to the MinHash index — the exact contract of
-    ``bm25_index_apply_cdc`` / ``ann_index_apply_cdc`` (shared
-    ``_index_common.resolve_cdc``), so ONE change log keeps all
-    the index families in lockstep with a mutable corpus: last op
-    per id wins, D-of-missing is a no-op, I/U upsert. This is what
-    keeps near-dup suppression honest under updates — a stale band
-    row would drop new documents as duplicates of content that no
-    longer exists. 'M' (metadata-only) ops fold into
-    :func:`minhash_index_update_metadata` AFTER the deletes and
-    upserts (shared ``resolve_cdc_with_meta`` semantics: id plus ALL
-    ``store_cols`` per 'M' row, not-visible ids are no-ops counted in
-    ``meta_noops``, superseded 'M's vanish) — a re-grade never
-    re-shingles. Returns ``{"deleted": d, "delete_noops": n,
-    "updated": u, "inserted": i, "meta_updated": mu,
-    "meta_noops": mn, "version": v}``."""
-    from parq_tools_spark.operators._index_common import (
-        resolve_cdc_with_meta,
-    )
-
-    _, _, m = _index_manifest_full(spark, path)
-    p = _manifest_params(spark, path, m)
-    id_col = p["id_col"]
-
-    final, metas = resolve_cdc_with_meta(changes, id_col, op_col, seq_col)
-    deletes = final.filter(F.col(op_col) == "D").select(id_col).distinct()
-    # the text column is selected LAZILY: a delete-only change log
-    # (no text_col in its schema) must apply cleanly, exactly like
-    # the BM25 contract — the column is only required for I/U rows
-    ups_rows = final.filter(F.col(op_col).isin("I", "U"))
-    # both branch sizes in ONE aggregate job over the (checkpointed)
-    # resolved batch — resolve_cdc leaves at most one row per id
-    sizes = final.agg(
-        F.count(F.when(F.col(op_col) == "D", 1)),
-        F.count(F.when(F.col(op_col).isin("I", "U"), 1)),
-    ).first()
-    has_ups = bool(int(sizes[1]))
-
-    # ONE band-0 visibility scan serves both the delete no-op filter
-    # and the upsert's updated/inserted probe (their ids are disjoint
-    # after resolve_cdc) — restricted to the batch's touched ids
-    # before materializing, so the checkpoint is O(batch)
-    n_d = int(sizes[0])
-    visible_touched = None
-    if n_d or has_ups:
-        touched = deletes
-        if has_ups:
-            touched = touched.unionByName(
-                ups_rows.select(id_col)
-            ).distinct()
-        visible = _minhash_visible_ids(spark, path, m, id_col)
-        if visible is not None:
-            visible_touched = _mat(
-                visible.join(F.broadcast(touched), on=id_col).distinct()
-            )
-
-    n_deleted, n_noop = 0, 0
-    if n_d:
-        n_vis = 0
-        if visible_touched is not None:
-            from parq_tools_spark.operators._index_common import (
-                eager_stats,
-            )
-
-            visible_d, _vst = eager_stats(
-                visible_touched.join(F.broadcast(deletes), on=id_col),
-                n=F.count(F.lit(1)),
-            )
-            n_vis = int(_vst["n"])
-            if n_vis:
-                n_deleted = minhash_index_delete(
-                    spark, path, visible_d, _verified=True
-                )["deleted"]
-        n_noop = n_d - n_vis
-    out = {
-        "deleted": n_deleted,
-        "delete_noops": n_noop,
-        "updated": 0,
-        "inserted": 0,
-    }
-    if has_ups:
-        from parq_tools_spark.operators._index_common import (
-            check_store_cols,
-        )
-
-        check_store_cols(
-            ups_rows, p.get("store_cols", []),
-            "minhash_index_apply_cdc",
-        )
-        res = minhash_index_upsert(
-            ups_rows.select(
-                id_col, text_col, *p.get("store_cols", [])
-            ),
-            path,
-            text_col=text_col,
-            _visible_ids=visible_touched,
-        )
-        out.update(
-            {"updated": res["updated"], "inserted": res["inserted"]}
-        )
-    out.update({"meta_updated": 0, "meta_noops": 0})
-    if metas is not None:
-        from parq_tools_spark.operators._index_common import (
-            apply_cdc_meta,
-        )
-
-        # visibility resolves POST-upsert (fresh manifest): an 'M'
-        # for an id this very batch inserted must apply
-        _, _, m2 = _index_manifest_full(spark, path)
-        out.update(
-            apply_cdc_meta(
-                metas,
-                store=p.get("store_cols", []),
-                src_id_col=id_col,
-                dst_id_col=id_col,
-                visible_ids=_minhash_visible_ids(spark, path, m2, id_col),
-                update_fn=lambda upd: minhash_index_update_metadata(
-                    spark, path, upd
-                ),
-                fn="minhash_index_apply_cdc",
-            )
-        )
-    out["version"] = _index_vs(spark, path).current()
-    return out
+minhash_index_add = _BI.alias(BAND_FAMILY, "add")
+minhash_index_delete = _BI.alias(BAND_FAMILY, "delete")
+minhash_index_upsert = _BI.alias(BAND_FAMILY, "upsert")
+minhash_index_apply_cdc = _BI.alias(BAND_FAMILY, "apply_cdc")
+minhash_index_compact = _BI.alias(BAND_FAMILY, "compact")
+minhash_index_maybe_compact = _BI.alias(BAND_FAMILY, "maybe_compact")
+minhash_index_stats = _BI.alias(BAND_FAMILY, "stats")
+minhash_index_update_metadata = _BI.alias(BAND_FAMILY, "update_metadata")
+minhash_index_add_metadata_col = _BI.alias(BAND_FAMILY, "add_metadata_col")
+minhash_index_drop_metadata_col = _BI.alias(
+    BAND_FAMILY, "drop_metadata_col"
+)
 
 
 def minhash_index_query(
@@ -2094,6 +1405,9 @@ def minhash_index_query(
     Readers see exactly the segments the resolved manifest lists — an
     in-flight or crashed add/compact is invisible, so this never
     raises on maintenance state and never serves a partial band.
+    Deleted docs' band rows are hidden by per-segment version-scoped
+    tombstone anti-joins, so a new doc can never be dropped as a
+    duplicate of removed content.
 
     ``allowed_ids`` (sequence or DataFrame of ids — the shared
     :func:`~parq_tools_spark.operators._index_common.
@@ -2110,39 +1424,13 @@ def minhash_index_query(
     build_filter_expression`) and pushed by Catalyst into the
     band-row scans: no metadata table join, no id set materialized.
     Composes with ``allowed_ids`` (both apply)."""
-    from functools import reduce
-
-    from pyspark.sql import types as T
-
-    from parq_tools_spark.sources.statefs import StateFS
-
-    # ONE manifest resolution covers params + segments (resolving
-    # them separately could tear across a rebuild-with-new-params)
-    _, _, m = _index_manifest_full(spark, path, version)
-    p = _manifest_params(spark, path, m)
-    # validate (and compile) the where predicate UP FRONT, so a bad
-    # predicate or a store_cols-less index fails identically whether
-    # the index is empty or not
-    where_col = None
-    if where is not None:
-        from parq_tools_spark.plans.query_parser import (
-            build_filter_expression,
-        )
-
-        stored = p.get("store_cols", [])
-        if not stored:
-            raise ValueError(
-                f"minhash index at {path} stores no metadata columns; "
-                "where= needs an index built with "
-                "minhash_index_write(..., store_cols=[...])"
-            )
-        where_col = build_filter_expression(where, columns=stored)
-    fs = StateFS(spark, path)
-    segments = list(m["segments"])
-    live = [s for s in segments if fs.list_files(f"{path}/{s}")]
-    if not live:
-        # freshly-bootstrapped index (params sidecar, zero band rows):
-        # nothing can match — a typed empty relation keeps callers
+    _, _, m, p = _BI.resolve(BAND_FAMILY, spark, path, version)
+    indexed_banded = _BI.serve_rows(
+        BAND_FAMILY, spark, path, m, p, where=where, allowed_ids=allowed_ids
+    )
+    if indexed_banded is None:
+        # freshly-bootstrapped index (zero band rows): nothing can
+        # match — a typed empty relation keeps callers
         # (incremental_dedupe, the streaming admitter) branch-free
         id_type = new_docs.schema[p["id_col"]].dataType
         return spark.createDataFrame(
@@ -2154,39 +1442,6 @@ def minhash_index_query(
                     T.StructField("est_jaccard", T.DoubleType()),
                 ]
             ),
-        )
-    # per-segment version-scoped tombstone anti-joins (shared
-    # protocol, operators/_index_common.py): deleted docs' band rows
-    # are invisible, so a new doc can never be dropped as a
-    # duplicate of removed content
-    from parq_tools_spark.operators._index_common import (
-        delete_batches,
-        visible_scan,
-    )
-
-    batches = delete_batches(spark, path, m)
-    indexed_banded = reduce(
-        DataFrame.unionByName,
-        [
-            visible_scan(spark, path, s, batches, p["id_col"])
-            for s in live
-        ],
-    )
-    if where_col is not None:
-        # a plain Column filter over in-row metadata: Catalyst pushes
-        # it through the segment union into the parquet scans
-        indexed_banded = indexed_banded.filter(where_col)
-    if allowed_ids is not None:
-        from parq_tools_spark.operators._index_common import (
-            apply_allowed_ids,
-        )
-
-        indexed_banded = apply_allowed_ids(
-            indexed_banded,
-            p["id_col"],
-            allowed_ids,
-            indexed_banded.schema[p["id_col"]].dataType,
-            "minhash_index_query",
         )
     return minhash_pairs_between(
         None,
@@ -2281,108 +1536,3 @@ def incremental_dedupe(
         survivors = _mat(survivors)
         minhash_index_add(survivors, index_path, text_col=text_col)
     return survivors
-
-
-
-def minhash_index_update_metadata(
-    spark, path: str, updates: DataFrame,
-    max_segments: int = 0, max_delete_batches: int = 0,
-) -> dict:
-    """Metadata-only update over ``store_cols`` — the shared band-row
-    implementation (:func:`~parq_tools_spark.operators._index_common.
-    update_band_metadata`): affected ids' band rows rewritten with new
-    metadata (signatures untouched, nothing re-shingled), one atomic
-    segment + tombstone commit. ``max_segments`` /
-    ``max_delete_batches`` arm the stats-driven compaction trigger
-    AFTER the commit (:func:`minhash_index_maybe_compact`): a
-    metadata-churn-only loop adds a segment + tombstone per call and
-    would otherwise fragment the manifest until the next ingest. Both
-    default OFF (0)."""
-    from parq_tools_spark.operators._index_common import (
-        retention,
-        update_band_metadata,
-    )
-
-    vs, cur, m = _index_manifest_full(spark, path)
-    p = _manifest_params(spark, path, m)
-    vs.clean_stale(cur, keep_versions=retention(m))
-    _sweep_index_orphans(vs.fs, path, vs, cur)
-    out = update_band_metadata(
-        spark, path, updates, vs=vs, cur=cur, m=m,
-        params=p, fn="minhash_index_update_metadata",
-    )
-    if max_segments or max_delete_batches:
-        minhash_index_maybe_compact(
-            spark, path,
-            max_segments=max_segments,
-            max_delete_batches=max_delete_batches,
-        )
-    return out
-
-
-def minhash_index_add_metadata_col(
-    spark, path: str, values: DataFrame, default=_CM.NO_DEFAULT,
-    task_splits=1,
-) -> dict:
-    """Backfill NEW metadata column(s) over the MinHash index — the
-    shared band-row implementation (:func:`~parq_tools_spark.
-    operators._index_common.add_band_metadata_col`): every visible
-    band row rewritten with the extra column(s) (signatures carried
-    as stored values, nothing re-shingled), one compaction-shaped
-    commit that extends ``params.store_cols`` atomically. ``values``
-    may carry k new columns — ONE O(index) rewrite lands them all
-    (``default`` a shared fill or a per-column dict). Works on a
-    store_cols-less index (the first metadata columns); ids absent
-    from ``values`` take ``default`` (omit it and an uncovered id
-    raises before anything is written). Returns ``{"added": [cols],
-    "version": v}``."""
-    from parq_tools_spark.operators._index_common import (
-        add_band_metadata_col,
-        retention,
-    )
-
-    vs, cur, m = _index_manifest_full(spark, path)
-    p = _manifest_params(spark, path, m)
-    vs.clean_stale(cur, keep_versions=retention(m))
-    _sweep_index_orphans(vs.fs, path, vs, cur)
-    return add_band_metadata_col(
-        spark, path, values, default,
-        vs=vs, cur=cur, m=m, params=p,
-        reserved={
-            "signature", "band", "bhash", p["id_col"],
-            # the index's own text column: an unprojected values
-            # frame must not silently store the raw text on every
-            # band row (older manifests lack the key: default name)
-            p.get("text_col", "text"),
-        },
-        fn="minhash_index_add_metadata_col",
-        task_splits=task_splits,
-    )
-
-
-def minhash_index_drop_metadata_col(
-    spark, path: str, cols, task_splits=1,
-) -> dict:
-    """Drop stored metadata column(s) from the MinHash index — the
-    PRUNE leg of the metadata lifecycle (shared band-row
-    implementation :func:`~parq_tools_spark.operators._index_common.
-    drop_band_metadata_cols`): every visible band row rewritten
-    without the column(s), one compaction-shaped commit shrinking
-    ``params.store_cols`` atomically. ``cols`` is one name or a
-    list; dropping the last stored column reverts the index to
-    store_cols-less. Returns ``{"dropped": [cols], "version": v}``."""
-    from parq_tools_spark.operators._index_common import (
-        drop_band_metadata_cols,
-        retention,
-    )
-
-    vs, cur, m = _index_manifest_full(spark, path)
-    p = _manifest_params(spark, path, m)
-    vs.clean_stale(cur, keep_versions=retention(m))
-    _sweep_index_orphans(vs.fs, path, vs, cur)
-    return drop_band_metadata_cols(
-        spark, path, cols,
-        vs=vs, cur=cur, m=m, params=p,
-        fn="minhash_index_drop_metadata_col",
-        task_splits=task_splits,
-    )

@@ -5,17 +5,23 @@ path)`` sniffs which family's manifest marker the path holds and
 returns a handle exposing the shared operation surface —
 ``query / stats / versions / add / delete / upsert / apply_cdc /
 compact / maybe_compact / update_metadata / add_metadata_col /
-drop_metadata_col`` —
-with the family's own functions behind it (same defaults, same semantics, nothing re-implemented here).
+drop_metadata_col`` — with the family's own public functions behind
+it (same defaults, same semantics, nothing re-implemented here).
 
-Why a facade and not a base class: the families deliberately share
-PROTOCOL (``_index_common.py`` — generation tags, version-scoped
-tombstones, manifest resolution) but not implementation, because
-their data models differ in real ways (postings + term snapshots,
-PQ codes + a model file, band rows). The facade is the read-side
-convenience for code that holds a path and doesn't know — or care —
-which family wrote it: maintenance jobs sweeping a directory of
-indexes, inspection tooling, REPL forensics.
+What the families share: every family follows one PROTOCOL
+(``_index_common.py`` — generation tags, version-scoped tombstones,
+manifest resolution, the CDC and metadata contracts). The two
+band-row families, MinHash and SimHash, also share one
+IMPLEMENTATION: their data models are the same (band rows), so every
+lifecycle op exists once in ``_band_index.py``, and each family's
+public ``*_index_<op>`` names are that op bound to the family's spec.
+This facade takes their operation tables from those specs. BM25
+(postings + term snapshots) and ANN (PQ codes + a model file) still
+implement the lifecycle per family.
+
+The facade is the read-side convenience for code that holds a path
+and doesn't know — or care — which family wrote it: maintenance jobs
+sweeping a directory of indexes, inspection tooling, REPL forensics.
 
 The full per-family surface is tabulated in ``MIGRATION.md`` (the
 per-family function names this dispatches to).
@@ -72,37 +78,13 @@ def _ops(family: str) -> dict:
             "add_metadata_col": m.bm25_index_add_metadata_col,
             "drop_metadata_col": m.bm25_index_drop_metadata_col,
         }
+    from parq_tools_spark.operators._band_index import op_table
+
     if family == "minhash":
-        from parq_tools_spark.operators import dedup as m
-
-        return {
-            "query": m.minhash_index_query,
-            "stats": m.minhash_index_stats,
-            "add": m.minhash_index_add,
-            "delete": m.minhash_index_delete,
-            "upsert": m.minhash_index_upsert,
-            "apply_cdc": m.minhash_index_apply_cdc,
-            "compact": m.minhash_index_compact,
-            "maybe_compact": m.minhash_index_maybe_compact,
-            "update_metadata": m.minhash_index_update_metadata,
-            "add_metadata_col": m.minhash_index_add_metadata_col,
-            "drop_metadata_col": m.minhash_index_drop_metadata_col,
-        }
-    from parq_tools_spark.operators import simhash_index as m
-
-    return {
-        "query": m.simhash_index_query,
-        "stats": m.simhash_index_stats,
-        "add": m.simhash_index_add,
-        "delete": m.simhash_index_delete,
-        "upsert": m.simhash_index_upsert,
-        "apply_cdc": m.simhash_index_apply_cdc,
-        "compact": m.simhash_index_compact,
-        "maybe_compact": m.simhash_index_maybe_compact,
-        "update_metadata": m.simhash_index_update_metadata,
-        "add_metadata_col": m.simhash_index_add_metadata_col,
-        "drop_metadata_col": m.simhash_index_drop_metadata_col,
-    }
+        from parq_tools_spark.operators.dedup import BAND_FAMILY
+    else:
+        from parq_tools_spark.operators.simhash_index import BAND_FAMILY
+    return op_table(BAND_FAMILY)
 
 
 class IndexHandle:

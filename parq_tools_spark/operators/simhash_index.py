@@ -2,7 +2,10 @@
 protocol — the fourth index family (BM25 `operators/search.py`,
 MinHash `operators/dedup.py`, vector-ANN `operators/ann_index.py`),
 sharing their lifecycle machinery (`operators/_index_common.py`) so
-one change log and one maintenance discipline serve all of them.
+one change log and one maintenance discipline serve all of them. The
+MinHash and SimHash families share one data model (band rows), so
+every lifecycle op beyond encoding and serving is ONE implementation,
+`operators/_band_index.py`, bound to this module's :data:`BAND_FAMILY`.
 
 Beyond-reference surface: the reference (elphick/parq-tools) has no
 dedup stack; this gives the Hamming-distance near-dup path
@@ -61,39 +64,13 @@ __all__ = [
     "simhash_index_drop_metadata_col",
 ]
 
-_SH_MARKER = "_simhash_manifest.json"
-
+from parq_tools_spark.operators import _band_index as _BI  # noqa: E402
 from parq_tools_spark.operators._index_common import (  # noqa: E402
-    NO_DEFAULT as _NO_DEFAULT,
     check_self_exclusion_types as _check_excl_types,
-    delete_batches as _delete_batches,
     id_field as _id_field,
     id_field_json as _id_field_json,
     materialize as _mat,
-    resolve_cdc as _resolve_cdc,
-    resolve_manifest as _resolve_manifest,
-    retention as _retention,
-    tag as _tag,
-    visible_scan as _visible_scan,
 )
-
-
-def _sh_vs(spark, path: str):
-    from parq_tools_spark.sources.statefs import VersionedState
-
-    return VersionedState(spark, path, _SH_MARKER)
-
-
-def _sh_manifest(spark, path: str, version=None):
-    vs = _sh_vs(spark, path)
-    cur, m = _resolve_manifest(
-        vs,
-        path,
-        version,
-        what="simhash index",
-        build_hint="; build one with simhash_index_write",
-    )
-    return vs, cur, m
 
 
 def _banded_simhash(
@@ -155,6 +132,24 @@ def _banded_simhash(
     ).select(id_col, *meta_cols, "simhash", "bk.band", "bk.bval")
 
 
+def _simhash_band_rows(df, p: dict, text_col: str, meta_cols) -> DataFrame:
+    return _banded_simhash(
+        df, p["id_col"], text_col, p["bits"], p["n_bands"],
+        p["hash_family"], meta_cols=meta_cols,
+    )
+
+
+#: The SimHash band-row family: ``(id, *store_cols, simhash, band,
+#: bval)`` rows under ``_simhash_manifest.json`` commits.
+BAND_FAMILY = _BI.BandFamily(
+    family="simhash",
+    module=__name__,
+    marker="_simhash_manifest.json",
+    reserved=("simhash", "band", "bval"),
+    band_rows=_simhash_band_rows,
+)
+
+
 def simhash_index_write(
     df: DataFrame,
     path: str,
@@ -183,24 +178,6 @@ def simhash_index_write(
     at serving time. Every subsequent ingest batch must supply the
     same columns; tombstones hide whole rows and compaction rewrites
     whole rows, so updates stay correct for free."""
-    import json
-
-    from parq_tools_spark.operators._index_common import (
-        check_store_cols,
-    )
-
-    if keep_versions < 1:
-        raise ValueError("keep_versions must be >= 1")
-    store_cols = list(store_cols)
-    # text_col reserved: raw text on every band row = silent bloat
-    reserved = {"simhash", "band", "bval", id_col, text_col}
-    bad = [c for c in store_cols if c in reserved]
-    if bad:
-        raise ValueError(
-            f"store_cols {bad} collide with the band-row schema's "
-            f"reserved columns ({sorted(reserved)})"
-        )
-    check_store_cols(df, store_cols, "simhash_index_write")
     if not 0 < bits <= 63:
         raise ValueError("bits must be in (0, 63]")
     if not 1 <= n_bands <= bits:
@@ -215,485 +192,35 @@ def simhash_index_write(
             "beyond the fingerprint width are constant-zero keys "
             "that pair every document with every document"
         )
-    spark = df.sparkSession
-    vs = _sh_vs(spark, path)
-    cur = vs.current()
-    if cur is not None:
-        vs.clean_stale(
-            cur, keep_versions=_retention(json.loads(vs.read_marker(cur)))
-        )
-        _sh_sweep_orphans(vs, path)
-    new = (cur or 0) + 1
-
-    banded = _banded_simhash(
-        df, id_col, text_col, bits, n_bands, hash_family,
-        meta_cols=store_cols,
-    )
-    seg = _tag(new, "seg")
-    banded.write.mode("errorifexists").partitionBy("band").parquet(
-        f"{path}/{seg}"
-    )
-    vs.commit(
-        new,
-        json.dumps(
-            {
-                "version": new,
-                "params": {
-                    "id_col": id_col,
-                    "text_col": text_col,
-                    "bits": bits,
-                    "n_bands": n_bands,
-                    "hash_family": hash_family,
-                    "keep_versions": keep_versions,
-                    "store_cols": store_cols,
-                },
-                "id_type": _id_field_json(df, id_col),
-                "segments": [seg],
-            }
-        ),
-    )
-
-
-def _sh_sweep_orphans(vs, path: str) -> None:
-    """Drop seg-/del- directories no surviving manifest references —
-    the shared orphan rule (crashed operations, superseded
-    generations past reader grace)."""
-    from parq_tools_spark.operators.dedup import _sweep_index_orphans
-
-    _sweep_index_orphans(vs.fs, path, vs, vs.current())
-
-
-def simhash_index_add(
-    df: DataFrame, path: str, text_col: str = "text"
-) -> None:
-    """Append a new batch's band rows as one immutable segment under
-    the index's FROZEN params (atomic manifest commit; ids must be
-    new — the id-unique contract every index family shares)."""
-    import json
-
-    spark = df.sparkSession
-    vs, cur, m = _sh_manifest(spark, path)
-    p = m["params"]
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    from parq_tools_spark.operators._index_common import (
-        check_store_cols,
-    )
-
-    check_store_cols(
-        df, p.get("store_cols", []), "simhash_index_add"
-    )
-    banded = _banded_simhash(
+    _BI.write(
+        BAND_FAMILY,
         df,
-        p["id_col"],
-        text_col,
-        p["bits"],
-        p["n_bands"],
-        p["hash_family"],
-        meta_cols=p.get("store_cols", []),
-    )
-    seg = _tag(cur + 1, "seg")
-    banded.write.mode("errorifexists").partitionBy("band").parquet(
-        f"{path}/{seg}"
-    )
-    # {**m} carries pending tombstones forward — dropping them would
-    # resurrect deleted docs' band rows
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {**m, "version": cur + 1, "segments": m["segments"] + [seg]}
-        ),
-    )
-
-
-def _sh_visible_ids(spark, path: str, m: dict, id_col: str):
-    """DISTINCT visible doc ids from band 0 only (every indexed doc
-    has exactly one row per band, so one partition-pruned directory
-    per segment gives exact membership at 1/n_bands of the scan)."""
-    from functools import reduce
-
-    fs = _sh_vs(spark, path).fs
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-    if not live:
-        return None
-    batches = _delete_batches(spark, path, m)
-    return reduce(
-        DataFrame.unionByName,
-        [
-            _visible_scan(spark, path, s, batches, id_col)
-            .filter(F.col("band") == 0)
-            .select(id_col)
-            for s in live
-        ],
-    ).distinct()
-
-
-def simhash_index_delete(
-    spark, path: str, ids, _verified: bool = False
-) -> dict:
-    """Delete documents' band rows by id — VERSION-SCOPED tombstones
-    (the shared LSM protocol): a later re-add of the same id is
-    immediately visible with no compaction in between. Stale band
-    rows are not just waste — a new document colliding with a REMOVED
-    doc's bands would be dropped as a duplicate of content that no
-    longer exists. Missing ids raise (membership via band rows is
-    exact). Returns ``{"deleted": n, "version": v}``."""
-    import json
-
-    from pyspark.sql import types as T
-
-    vs, cur, m = _sh_manifest(spark, path)
-    id_col = m["params"]["id_col"]
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _sh_sweep_orphans(vs, path)
-
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
-    else:
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids], T.StructType([_id_field(m)])
-        ).distinct()
-    from parq_tools_spark.operators._index_common import eager_stats
-
-    ids_df, _st = eager_stats(ids_df, n=F.count(F.lit(1)))
-    n_del = int(_st["n"])
-    if n_del == 0:
-        return {"deleted": 0, "version": cur}
-
-    if not _verified:
-        visible = _sh_visible_ids(spark, path, m, id_col)
-        n_found = (
-            visible.join(F.broadcast(ids_df), on=id_col).distinct().count()
-            if visible is not None
-            else 0
-        )
-        if n_found < n_del:
-            raise ValueError(
-                f"simhash_index_delete: {n_del - n_found} of {n_del} "
-                "requested id(s) are not visible in the index (typo, "
-                "never indexed, or already deleted)"
-            )
-
-    del_dir = _tag(cur + 1, "del")
-    ids_df.write.mode("errorifexists").parquet(f"{path}/{del_dir}")
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                **m,
-                "version": cur + 1,
-                "deletes": m.get("deletes", [])
-                + [{"dir": del_dir, "upto": cur}],
-            }
-        ),
-    )
-    return {"deleted": n_del, "version": cur + 1}
-
-
-def simhash_index_upsert(
-    df: DataFrame, path: str, text_col: str = "text", _visible_ids=None
-) -> dict:
-    """Insert-or-replace: visible batch ids are tombstoned (one
-    commit, visibility pre-verified from the band rows), then the
-    whole batch appends — O(batch), never an index rewrite.
-    ``_visible_ids`` is the apply_cdc fast path. Returns
-    ``{"updated": u, "inserted": i, "version": v}``."""
-    spark = df.sparkSession
-    vs, cur, m = _sh_manifest(spark, path)
-    id_col = m["params"]["id_col"]
-    # batch size + id-uniqueness in ONE aggregate job (was two)
-    row = df.agg(
-        F.count(F.lit(1)), F.countDistinct(F.col(id_col))
-    ).first()
-    n_rows, n_batch = int(row[0]), int(row[1])
-    ids_df = df.select(F.col(id_col)).distinct()
-    if n_batch < n_rows:
-        raise ValueError(
-            f"simhash_index_upsert: batch carries {n_rows - n_batch} "
-            f"duplicate {id_col} row(s) — one document per id"
-        )
-    visible = (
-        _visible_ids
-        if _visible_ids is not None
-        else _sh_visible_ids(spark, path, m, id_col)
-    )
-    updated = 0
-    if visible is not None:
-        from parq_tools_spark.operators._index_common import (
-            eager_stats,
-        )
-
-        existing, _est = eager_stats(
-            visible.join(F.broadcast(ids_df), on=id_col).distinct(),
-            n=F.count(F.lit(1)),
-        )
-        updated = int(_est["n"])
-        if updated:
-            simhash_index_delete(spark, path, existing, _verified=True)
-    simhash_index_add(df, path, text_col=text_col)
-    return {
-        "updated": updated,
-        "inserted": n_batch - updated,
-        "version": _sh_vs(spark, path).current(),
-    }
-
-
-def simhash_index_apply_cdc(
-    spark,
-    path: str,
-    changes: DataFrame,
-    op_col: str = "op",
-    seq_col: Optional[str] = None,
-    text_col: str = "text",
-) -> dict:
-    """Apply a CDC batch — the exact contract of the other three
-    families (shared ``resolve_cdc``): last op per id wins, a final
-    'D' for an id not in the index is a NO-OP, final 'I'/'U' rows
-    upsert. ONE band-0 visibility scan serves both the delete no-op
-    filter and the upsert probe. 'M' (metadata-only) ops fold into
-    :func:`simhash_index_update_metadata` AFTER the deletes and
-    upserts (shared ``resolve_cdc_with_meta`` semantics: id plus ALL
-    ``store_cols`` per 'M' row, not-visible ids are no-ops counted in
-    ``meta_noops``, superseded 'M's vanish) — a re-grade never
-    re-fingerprints. Returns ``{"deleted": d, "delete_noops": n,
-    "updated": u, "inserted": i, "meta_updated": mu,
-    "meta_noops": mn, "version": v}``."""
-    from parq_tools_spark.operators._index_common import (
-        resolve_cdc_with_meta,
-    )
-
-    _, _, m = _sh_manifest(spark, path)
-    id_col = m["params"]["id_col"]
-
-    final, metas = resolve_cdc_with_meta(changes, id_col, op_col, seq_col)
-    deletes = final.filter(F.col(op_col) == "D").select(id_col).distinct()
-    # text selected LAZILY: a delete-only change log applies cleanly
-    ups_rows = final.filter(F.col(op_col).isin("I", "U"))
-    # both branch sizes in ONE aggregate job over the (checkpointed)
-    # resolved batch — resolve_cdc leaves at most one row per id
-    sizes = final.agg(
-        F.count(F.when(F.col(op_col) == "D", 1)),
-        F.count(F.when(F.col(op_col).isin("I", "U"), 1)),
-    ).first()
-    has_ups = bool(int(sizes[1]))
-
-    n_d = int(sizes[0])
-    visible_touched = None
-    if n_d or has_ups:
-        touched = deletes
-        if has_ups:
-            touched = touched.unionByName(
-                ups_rows.select(id_col)
-            ).distinct()
-        visible = _sh_visible_ids(spark, path, m, id_col)
-        if visible is not None:
-            visible_touched = _mat(
-                visible.join(F.broadcast(touched), on=id_col).distinct()
-            )
-
-    n_deleted, n_noop = 0, 0
-    if n_d:
-        n_vis = 0
-        if visible_touched is not None:
-            from parq_tools_spark.operators._index_common import (
-                eager_stats,
-            )
-
-            visible_d, _vst = eager_stats(
-                visible_touched.join(F.broadcast(deletes), on=id_col),
-                n=F.count(F.lit(1)),
-            )
-            n_vis = int(_vst["n"])
-            if n_vis:
-                n_deleted = simhash_index_delete(
-                    spark, path, visible_d, _verified=True
-                )["deleted"]
-        n_noop = n_d - n_vis
-    out = {
-        "deleted": n_deleted,
-        "delete_noops": n_noop,
-        "updated": 0,
-        "inserted": 0,
-    }
-    if has_ups:
-        from parq_tools_spark.operators._index_common import (
-            check_store_cols,
-        )
-
-        store = m["params"].get("store_cols", [])
-        check_store_cols(ups_rows, store, "simhash_index_apply_cdc")
-        res = simhash_index_upsert(
-            ups_rows.select(id_col, text_col, *store),
-            path,
-            text_col=text_col,
-            _visible_ids=visible_touched,
-        )
-        out.update(
-            {"updated": res["updated"], "inserted": res["inserted"]}
-        )
-    out.update({"meta_updated": 0, "meta_noops": 0})
-    if metas is not None:
-        from parq_tools_spark.operators._index_common import (
-            apply_cdc_meta,
-        )
-
-        # visibility resolves POST-upsert (fresh manifest): an 'M'
-        # for an id this very batch inserted must apply
-        _, _, m2 = _sh_manifest(spark, path)
-        out.update(
-            apply_cdc_meta(
-                metas,
-                store=m["params"].get("store_cols", []),
-                src_id_col=id_col,
-                dst_id_col=id_col,
-                visible_ids=_sh_visible_ids(spark, path, m2, id_col),
-                update_fn=lambda upd: simhash_index_update_metadata(
-                    spark, path, upd
-                ),
-                fn="simhash_index_apply_cdc",
-            )
-        )
-    out["version"] = _sh_vs(spark, path).current()
-    return out
-
-
-def simhash_index_compact(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    min_files_per_band: int = 8,
-    force: bool = False,
-) -> dict:
-    """Rewrite the manifest's segments into one (per-band read +
-    coalesce — the band is the directory, so no shuffle) when any
-    band's file count exceeds both ``min_files_per_band`` and its
-    byte-target; pending tombstones force the rewrite regardless
-    (folding them bounds the query-time anti-join side). Crash-safe
-    with no repair path. Returns ``{band: (files_before,
-    files_after)}`` for bands whose count dropped."""
-    import json
-    import math
-    from functools import reduce
-
-    vs, cur, m = _sh_manifest(spark, path)
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _sh_sweep_orphans(vs, path)
-    fs = vs.fs
-
-    per_band: dict = {}
-    for seg in m["segments"]:
-        for entry, is_dir, _ in fs.list_status(f"{path}/{seg}"):
-            if not (is_dir and entry.startswith("band=")):
-                continue
-            b = int(entry.split("=", 1)[1])
-            files = [
-                size
-                for n_, d, size in fs.list_status(f"{path}/{seg}/{entry}")
-                if not d and n_.endswith(".parquet")
-            ]
-            cnt, tot = per_band.get(b, (0, 0))
-            per_band[b] = (cnt + len(files), tot + sum(files))
-    targets = {
-        b: max(1, math.ceil(tot / target_file_bytes))
-        for b, (cnt, tot) in per_band.items()
-    }
-    id_col = m["params"]["id_col"]
-    batches = _delete_batches(spark, path, m)
-    if not force and not batches and not any(
-        cnt > min_files_per_band and cnt > targets[b]
-        for b, (cnt, tot) in per_band.items()
-    ):
-        return {}
-
-    new_seg = _tag(cur + 1, "seg")
-    for b in sorted(per_band):
-        if not batches:
-            srcs = [
-                f"{path}/{seg}/band={b}"
-                for seg in m["segments"]
-                if fs.exists(f"{path}/{seg}/band={b}")
-            ]
-            if not srcs:
-                continue
-            from parq_tools_spark.operators._index_common import (
-                read_committed,
-            )
-
-            band_df = read_committed(spark, *srcs)
-        else:
-            parts = [
-                _visible_scan(spark, path, seg, batches, id_col).filter(
-                    F.col("band") == b
-                )
-                for seg in m["segments"]
-                if fs.exists(f"{path}/{seg}/band={b}")
-            ]
-            if not parts:
-                continue
-            band_df = reduce(DataFrame.unionByName, parts).drop("band")
-        band_df.coalesce(targets[b]).write.mode("errorifexists").parquet(
-            f"{path}/{new_seg}/band={b}"
-        )
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {**m, "version": cur + 1, "segments": [new_seg], "deletes": []}
-        ),
-    )
-
-    compacted = {}
-    for b, (cnt, tot) in per_band.items():
-        n_after = sum(
-            1
-            for n_, d, _ in fs.list_status(f"{path}/{new_seg}/band={b}")
-            if not d and n_.endswith(".parquet")
-        )
-        if n_after < cnt:
-            compacted[b] = (cnt, n_after)
-    return compacted
-
-
-def simhash_index_maybe_compact(
-    spark,
-    path: str,
-    max_segments: int = 16,
-    max_delete_batches: int = 4,
-) -> bool:
-    """Stats-driven :func:`simhash_index_compact` (the shared
-    :func:`~parq_tools_spark.operators._index_common.maybe_compact`
-    trigger): rewrite only when the live manifest references more
-    than ``max_segments`` segments or more than
-    ``max_delete_batches`` tombstone batches are pending (the
-    SimHash manifest carries no row counter, so the batch bound
-    stands in for a tombstone fraction) — otherwise O(manifest) and
-    do nothing. When triggered, compaction runs with
-    ``force=True`` so the breach actually folds the
-    segment list instead of re-triggering every batch. Returns True
-    iff a compaction ran."""
-    from parq_tools_spark.operators._index_common import maybe_compact
-
-    return maybe_compact(
-        spark,
         path,
-        _SH_MARKER,
-        lambda: simhash_index_compact(spark, path, force=True),
-        max_segments=max_segments,
-        max_delete_batches=max_delete_batches,
+        {
+            "id_col": id_col,
+            "text_col": text_col,
+            "bits": bits,
+            "n_bands": n_bands,
+            "hash_family": hash_family,
+            "keep_versions": keep_versions,
+            "store_cols": list(store_cols),
+        },
+        extra={"id_type": _id_field_json(df, id_col)},
     )
 
 
-def simhash_index_stats(
-    spark, path: str, version: Optional[int] = None
-) -> dict:
-    """The resolved manifest's statistics — the staleness-contract
-    inspection point; ``version=`` inspects a retained historical
-    version."""
-    _, cur, m = _sh_manifest(spark, path, version)
-    return {
-        "version": cur,
-        "params": m["params"],
-        "n_segments": len(m["segments"]),
-        "pending_delete_batches": len(m.get("deletes", [])),
-    }
+simhash_index_add = _BI.alias(BAND_FAMILY, "add")
+simhash_index_delete = _BI.alias(BAND_FAMILY, "delete")
+simhash_index_upsert = _BI.alias(BAND_FAMILY, "upsert")
+simhash_index_apply_cdc = _BI.alias(BAND_FAMILY, "apply_cdc")
+simhash_index_compact = _BI.alias(BAND_FAMILY, "compact")
+simhash_index_maybe_compact = _BI.alias(BAND_FAMILY, "maybe_compact")
+simhash_index_stats = _BI.alias(BAND_FAMILY, "stats")
+simhash_index_update_metadata = _BI.alias(BAND_FAMILY, "update_metadata")
+simhash_index_add_metadata_col = _BI.alias(BAND_FAMILY, "add_metadata_col")
+simhash_index_drop_metadata_col = _BI.alias(
+    BAND_FAMILY, "drop_metadata_col"
+)
 
 
 def simhash_index_query(
@@ -732,29 +259,13 @@ def simhash_index_query(
     engine's filter parser and pushed by Catalyst into the band-row
     scans — no metadata join, no id set materialized; composes with
     ``allowed_ids`` (both apply)."""
-    from functools import reduce
-
     from pyspark.sql import types as T
 
-    _, _, m = _sh_manifest(spark, path, version)
-    p = m["params"]
+    _, _, m, p = _BI.resolve(BAND_FAMILY, spark, path, version)
     id_col = p["id_col"]
-    # validate/compile UP FRONT — errors identical on empty and
-    # non-empty indexes (the shared where= contract)
-    where_col = None
-    if where is not None:
-        from parq_tools_spark.plans.query_parser import (
-            build_filter_expression,
-        )
-
-        stored = p.get("store_cols", [])
-        if not stored:
-            raise ValueError(
-                f"simhash index at {path} stores no metadata columns; "
-                "where= needs an index built with "
-                "simhash_index_write(..., store_cols=[...])"
-            )
-        where_col = build_filter_expression(where, columns=stored)
+    indexed = _BI.serve_rows(
+        BAND_FAMILY, spark, path, m, p, where=where, allowed_ids=allowed_ids
+    )
     if exclude_same_id:
         _check_excl_types(
             new_docs.schema[id_col].dataType,
@@ -767,9 +278,7 @@ def simhash_index_query(
             f"pigeonhole guarantee requires max_hamming < n_bands "
             f"(index built with n_bands={p['n_bands']})"
         )
-    fs = _sh_vs(spark, path).fs
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-    if not live:
+    if indexed is None:
         id_type = new_docs.schema[id_col].dataType
         return spark.createDataFrame(
             [],
@@ -780,24 +289,6 @@ def simhash_index_query(
                     T.StructField("hamming", T.IntegerType()),
                 ]
             ),
-        )
-    batches = _delete_batches(spark, path, m)
-    indexed = reduce(
-        DataFrame.unionByName,
-        [_visible_scan(spark, path, s, batches, id_col) for s in live],
-    )
-    if where_col is not None:
-        # plain Column filter over in-row metadata — pushed through
-        # the segment union into the parquet scans
-        indexed = indexed.filter(where_col)
-    if allowed_ids is not None:
-        from parq_tools_spark.operators._index_common import (
-            apply_allowed_ids,
-        )
-
-        indexed = apply_allowed_ids(
-            indexed, id_col, allowed_ids, _id_field(m).dataType,
-            "simhash_index_query",
         )
     if _fresh_banded is not None:
         # caller already fingerprinted + banded the batch (the
@@ -869,8 +360,7 @@ def simhash_incremental_dedupe(
     """
     from parq_tools_spark.operators.dedup import hamming_pairs, simhash
 
-    _, _, m = _sh_manifest(spark, index_path)
-    p = m["params"]
+    p = _BI.resolve(BAND_FAMILY, spark, index_path)[3]
     id_col = p["id_col"]
     # the batch is fingerprinted ONCE (checkpointed) and shared by
     # both rules — without this the vs-index probe and the in-batch
@@ -907,101 +397,3 @@ def simhash_incremental_dedupe(
         survivors = _mat(survivors)
         simhash_index_add(survivors, index_path, text_col=text_col)
     return survivors
-
-
-def simhash_index_update_metadata(
-    spark, path: str, updates: DataFrame,
-    max_segments: int = 0, max_delete_batches: int = 0,
-) -> dict:
-    """Metadata-only update over ``store_cols`` — the shared band-row
-    implementation (:func:`~parq_tools_spark.operators._index_common.
-    update_band_metadata`): affected ids' band rows rewritten with new
-    metadata (fingerprints untouched, nothing re-fingerprinted), one
-    atomic segment + tombstone commit. ``max_segments`` /
-    ``max_delete_batches`` arm the stats-driven compaction trigger
-    AFTER the commit (:func:`simhash_index_maybe_compact`): a
-    metadata-churn-only loop adds a segment + tombstone per call and
-    would otherwise fragment the manifest until the next ingest. Both
-    default OFF (0)."""
-    from parq_tools_spark.operators._index_common import (
-        update_band_metadata,
-    )
-
-    vs, cur, m = _sh_manifest(spark, path)
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _sh_sweep_orphans(vs, path)
-    out = update_band_metadata(
-        spark, path, updates, vs=vs, cur=cur, m=m,
-        params=m["params"], fn="simhash_index_update_metadata",
-    )
-    if max_segments or max_delete_batches:
-        simhash_index_maybe_compact(
-            spark, path,
-            max_segments=max_segments,
-            max_delete_batches=max_delete_batches,
-        )
-    return out
-
-
-def simhash_index_add_metadata_col(
-    spark, path: str, values: DataFrame, default=_NO_DEFAULT,
-    task_splits=1,
-) -> dict:
-    """Backfill NEW metadata column(s) over the SimHash index — the
-    shared band-row implementation (:func:`~parq_tools_spark.
-    operators._index_common.add_band_metadata_col`): every visible
-    band row rewritten with the extra column(s) (fingerprints carried
-    as stored values, nothing re-fingerprinted), one
-    compaction-shaped commit that extends ``params.store_cols``
-    atomically. ``values`` may carry k new columns — ONE O(index)
-    rewrite lands them all (``default`` a shared fill or a per-column
-    dict). Works on a store_cols-less index (the first metadata
-    columns); ids absent from ``values`` take ``default`` (omit it
-    and an uncovered id raises before anything is written). Returns
-    ``{"added": [cols], "version": v}``."""
-    from parq_tools_spark.operators._index_common import (
-        add_band_metadata_col,
-    )
-
-    vs, cur, m = _sh_manifest(spark, path)
-    p = m["params"]
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _sh_sweep_orphans(vs, path)
-    return add_band_metadata_col(
-        spark, path, values, default,
-        vs=vs, cur=cur, m=m, params=p,
-        reserved={
-            "simhash", "band", "bval", p["id_col"],
-            # the index's own text column (older manifests lack the
-            # key: default name) — see minhash_index_add_metadata_col
-            p.get("text_col", "text"),
-        },
-        fn="simhash_index_add_metadata_col",
-        task_splits=task_splits,
-    )
-
-
-def simhash_index_drop_metadata_col(
-    spark, path: str, cols, task_splits=1,
-) -> dict:
-    """Drop stored metadata column(s) from the SimHash index — the
-    PRUNE leg of the metadata lifecycle (shared band-row
-    implementation :func:`~parq_tools_spark.operators._index_common.
-    drop_band_metadata_cols`): every visible band row rewritten
-    without the column(s), one compaction-shaped commit shrinking
-    ``params.store_cols`` atomically. ``cols`` is one name or a
-    list; dropping the last stored column reverts the index to
-    store_cols-less. Returns ``{"dropped": [cols], "version": v}``."""
-    from parq_tools_spark.operators._index_common import (
-        drop_band_metadata_cols,
-    )
-
-    vs, cur, m = _sh_manifest(spark, path)
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _sh_sweep_orphans(vs, path)
-    return drop_band_metadata_cols(
-        spark, path, cols,
-        vs=vs, cur=cur, m=m, params=m["params"],
-        fn="simhash_index_drop_metadata_col",
-        task_splits=task_splits,
-    )

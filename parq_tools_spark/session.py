@@ -27,6 +27,10 @@ def get_spark(app_name: str = "parq_tools_spark", **extra_conf) -> SparkSession:
     - Arrow enabled for any pandas-interop boundary (``toPandas``,
       Pandas UDFs) — vectorized transfer instead of per-row pickling.
     - UTC session timezone so timestamp semantics are deterministic.
+    - ``cleanCheckpoints``: reliable checkpoints (``materialize()``'s
+      ``reliable`` mode) are removed when their DataFrame is
+      garbage-collected, so a long-running stream does not grow its
+      checkpoint directory without bound.
     """
     # mapInPandas closures import this package lazily on the Python
     # workers; a sys.path tweak in the driver process does NOT reach
@@ -54,6 +58,9 @@ def get_spark(app_name: str = "parq_tools_spark", **extra_conf) -> SparkSession:
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.ui.enabled", "false")
+        # reliable-mode materialize() checkpoints are per call: delete
+        # each one once its DataFrame is garbage-collected
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for key, value in extra_conf.items():
         builder = builder.config(key, value)

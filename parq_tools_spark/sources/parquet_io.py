@@ -46,8 +46,11 @@ def _footer_schema(
 
     ``nanos_as_long=True`` mirrors inference under
     ``spark.sql.legacy.parquet.nanosAsLong=true`` (the streaming
-    events bootstrap sets it): TIMESTAMP(NANOS) columns resolve to
-    LongType exactly as that legacy conf makes Spark read them."""
+    events bootstrap sets it): top-level TIMESTAMP(NANOS) columns
+    resolve to LongType exactly as that legacy conf makes Spark read
+    them. A TIMESTAMP(NANOS) nested inside a struct, list or map
+    returns None (inference), since only top-level columns are
+    rewritten here."""
     try:
         import os as _os
 
@@ -79,12 +82,32 @@ def _footer_schema(
             import pyarrow as _pa
             from pyspark.sql import types as _T
 
+            def _holds_ns(t) -> bool:
+                if _pa.types.is_timestamp(t):
+                    return t.unit == "ns"
+                if _pa.types.is_struct(t):
+                    return any(
+                        _holds_ns(t.field(i).type)
+                        for i in range(t.num_fields)
+                    )
+                if _pa.types.is_map(t):
+                    return _holds_ns(t.key_type) or _holds_ns(t.item_type)
+                if (
+                    _pa.types.is_list(t)
+                    or _pa.types.is_large_list(t)
+                    or _pa.types.is_fixed_size_list(t)
+                ):
+                    return _holds_ns(t.value_type)
+                return False
+
             fields = []
             for f in arrow:
                 if _pa.types.is_timestamp(f.type) and f.type.unit == "ns":
                     fields.append(
                         _T.StructField(f.name, _T.LongType(), f.nullable)
                     )
+                elif _holds_ns(f.type):
+                    return None  # nested ns timestamp: infer
                 else:
                     fields.append(
                         from_arrow_schema(

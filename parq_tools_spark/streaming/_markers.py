@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-__all__ = ["MARKER", "last_applied", "commit_marker"]
+__all__ = ["MARKER", "last_applied", "commit_marker", "start_foreach_batch"]
 
 MARKER = "_stream_last_batch"
 
@@ -144,3 +144,19 @@ def commit_marker(
             if m.get("checkpoint") != ident:
                 continue
         fs.delete(f"{index_path}/{name}")
+
+
+def start_foreach_batch(df, process, checkpoint_dir: str, query_name,
+                        available_now: bool):
+    """Start ``df``'s ``foreachBatch(process)`` query — the one writer
+    setup every marker-protected sink shares: checkpointed, optionally
+    named, ``availableNow`` (drain the backlog and stop) or
+    continuous."""
+    writer = df.writeStream.foreachBatch(process).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if query_name:
+        writer = writer.queryName(query_name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from parq_tools_spark.streaming._markers import (
     commit_marker as _commit_marker,
     last_applied as _last_applied,
+    start_foreach_batch as _start_foreach_batch,
 )
 
 __all__ = [
@@ -103,14 +104,9 @@ def _run_index_stream(
             maybe_compact_fn(spark)
         _commit_marker(spark, index_path, checkpoint_dir, batch_id)
 
-    writer = changes.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        changes, _process, checkpoint_dir, query_name, available_now
     )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_bm25_index_stream(
@@ -403,6 +399,88 @@ def start_ann_index_stream(
     )
 
 
+def _start_band_index_stream(
+    spec,
+    build_params: dict,
+    changes: DataFrame,
+    index_path: str,
+    checkpoint_dir: str,
+    *,
+    id_col: str,
+    text_col: str,
+    op_col: str,
+    seq_col: Optional[str],
+    store_cols,
+    keep_versions: int,
+    compact_every: int,
+    max_segments: int,
+    max_delete_batches: int,
+    available_now: bool,
+    query_name: Optional[str],
+):
+    """The ONE CDC sink body of the band-row families (MinHash /
+    SimHash, ``operators/_band_index.py``): bootstrap an EMPTY index
+    (committed manifest, zero band rows, ``build_params`` are the
+    family's encode params) when nothing is committed, then fold every
+    batch through the family's ``apply_cdc`` inside
+    :func:`_run_index_stream`."""
+    from parq_tools_spark.operators import _band_index as _BI
+
+    fn = f"start_{spec.family}_index_stream"
+    if not changes.isStreaming:
+        raise ValueError(
+            f"{fn} needs a streaming DataFrame; use operators."
+            f"{spec.module.rsplit('.', 1)[1]}.{spec.family}_index_apply_cdc"
+            " for batch CDC"
+        )
+
+    def _apply(spark, batch_df: DataFrame) -> None:
+        if not _BI.committed(spec, spark, index_path):
+            from parq_tools_spark.operators._index_common import (
+                check_store_cols,
+            )
+
+            # validate here for the clear message — the bare select
+            # would throw UNRESOLVED_COLUMN before write's own check
+            check_store_cols(batch_df, list(store_cols), fn)
+            _BI.public(spec, "write")(
+                batch_df.limit(0).select(id_col, text_col, *store_cols),
+                index_path,
+                id_col=id_col,
+                text_col=text_col,
+                keep_versions=keep_versions,
+                store_cols=store_cols,
+                **build_params,
+            )
+        _BI.apply_cdc(
+            spec, spark, index_path, batch_df,
+            op_col=op_col, seq_col=seq_col, text_col=text_col,
+        )
+
+    def _maybe(spark):
+        _BI.maybe_compact(
+            spec,
+            spark,
+            index_path,
+            max_segments=max_segments,
+            max_delete_batches=max_delete_batches,
+        )
+
+    return _run_index_stream(
+        changes,
+        index_path,
+        checkpoint_dir,
+        _apply,
+        lambda spark, path: _BI.compact(spec, spark, path),
+        compact_every,
+        available_now,
+        query_name,
+        maybe_compact_fn=(
+            _maybe if (max_segments or max_delete_batches) else None
+        ),
+    )
+
+
 def start_minhash_index_stream(
     changes: DataFrame,
     index_path: str,
@@ -462,78 +540,18 @@ def start_minhash_index_stream(
     minhash_index_maybe_compact`), with the shared consult-every-
     batch rule of :func:`_run_index_stream`.
     """
-    if not changes.isStreaming:
-        raise ValueError(
-            "start_minhash_index_stream needs a streaming DataFrame; "
-            "use operators.dedup.minhash_index_apply_cdc for batch CDC"
-        )
+    from parq_tools_spark.operators.dedup import BAND_FAMILY
 
-    def _apply(spark, batch_df: DataFrame) -> None:
-        from parq_tools_spark.operators.dedup import (
-            minhash_index_apply_cdc,
-            minhash_index_is_committed,
-            minhash_index_write,
-        )
-
-        if not minhash_index_is_committed(spark, index_path):
-            from parq_tools_spark.operators._index_common import (
-                check_store_cols,
-            )
-
-            # validate here for the clear message — the bare select
-            # would throw UNRESOLVED_COLUMN before write's own check
-            check_store_cols(
-                batch_df, list(store_cols),
-                "start_minhash_index_stream",
-            )
-            minhash_index_write(
-                batch_df.limit(0).select(id_col, text_col, *store_cols),
-                index_path,
-                id_col=id_col,
-                text_col=text_col,
-                num_hashes=num_hashes,
-                bands=bands,
-                k=k,
-                hash_family=hash_family,
-                keep_versions=keep_versions,
-                store_cols=store_cols,
-            )
-        minhash_index_apply_cdc(
-            spark, index_path, batch_df,
-            op_col=op_col, seq_col=seq_col, text_col=text_col,
-        )
-
-    def _compact(spark, path):
-        from parq_tools_spark.operators.dedup import (
-            minhash_index_compact,
-        )
-
-        minhash_index_compact(spark, path)
-
-    def _maybe(spark):
-        from parq_tools_spark.operators.dedup import (
-            minhash_index_maybe_compact,
-        )
-
-        minhash_index_maybe_compact(
-            spark,
-            index_path,
-            max_segments=max_segments,
-            max_delete_batches=max_delete_batches,
-        )
-
-    return _run_index_stream(
-        changes,
-        index_path,
-        checkpoint_dir,
-        _apply,
-        _compact,
-        compact_every,
-        available_now,
-        query_name,
-        maybe_compact_fn=(
-            _maybe if (max_segments or max_delete_batches) else None
-        ),
+    return _start_band_index_stream(
+        BAND_FAMILY,
+        dict(num_hashes=num_hashes, bands=bands, k=k,
+             hash_family=hash_family),
+        changes, index_path, checkpoint_dir,
+        id_col=id_col, text_col=text_col, op_col=op_col, seq_col=seq_col,
+        store_cols=store_cols, keep_versions=keep_versions,
+        compact_every=compact_every, max_segments=max_segments,
+        max_delete_batches=max_delete_batches,
+        available_now=available_now, query_name=query_name,
     )
 
 
@@ -564,74 +582,15 @@ def start_simhash_index_stream(
     simhash_index.simhash_index_apply_cdc`; see the MinHash sink's
     docstring for the replay-a-change-log vs filter-an-ingest
     distinction and the ``store_cols=`` bootstrap contract)."""
-    if not changes.isStreaming:
-        raise ValueError(
-            "start_simhash_index_stream needs a streaming DataFrame; "
-            "use operators.simhash_index.simhash_index_apply_cdc for "
-            "batch CDC"
-        )
+    from parq_tools_spark.operators.simhash_index import BAND_FAMILY
 
-    def _apply(spark, batch_df: DataFrame) -> None:
-        from parq_tools_spark.operators.simhash_index import (
-            _sh_vs,
-            simhash_index_apply_cdc,
-            simhash_index_write,
-        )
-
-        if _sh_vs(spark, index_path).current() is None:
-            from parq_tools_spark.operators._index_common import (
-                check_store_cols,
-            )
-
-            check_store_cols(
-                batch_df, list(store_cols),
-                "start_simhash_index_stream",
-            )
-            simhash_index_write(
-                batch_df.limit(0).select(id_col, text_col, *store_cols),
-                index_path,
-                id_col=id_col,
-                text_col=text_col,
-                bits=bits,
-                n_bands=n_bands,
-                hash_family=hash_family,
-                keep_versions=keep_versions,
-                store_cols=store_cols,
-            )
-        simhash_index_apply_cdc(
-            spark, index_path, batch_df,
-            op_col=op_col, seq_col=seq_col, text_col=text_col,
-        )
-
-    def _compact(spark, path):
-        from parq_tools_spark.operators.simhash_index import (
-            simhash_index_compact,
-        )
-
-        simhash_index_compact(spark, path)
-
-    def _maybe(spark):
-        from parq_tools_spark.operators.simhash_index import (
-            simhash_index_maybe_compact,
-        )
-
-        simhash_index_maybe_compact(
-            spark,
-            index_path,
-            max_segments=max_segments,
-            max_delete_batches=max_delete_batches,
-        )
-
-    return _run_index_stream(
-        changes,
-        index_path,
-        checkpoint_dir,
-        _apply,
-        _compact,
-        compact_every,
-        available_now,
-        query_name,
-        maybe_compact_fn=(
-            _maybe if (max_segments or max_delete_batches) else None
-        ),
+    return _start_band_index_stream(
+        BAND_FAMILY,
+        dict(bits=bits, n_bands=n_bands, hash_family=hash_family),
+        changes, index_path, checkpoint_dir,
+        id_col=id_col, text_col=text_col, op_col=op_col, seq_col=seq_col,
+        store_cols=store_cols, keep_versions=keep_versions,
+        compact_every=compact_every, max_segments=max_segments,
+        max_delete_batches=max_delete_batches,
+        available_now=available_now, query_name=query_name,
     )

@@ -68,7 +68,119 @@ __all__ = [
 from parq_tools_spark.streaming._markers import (  # noqa: E402
     commit_marker as _commit_marker,
     last_applied as _last_applied,
+    start_foreach_batch as _start_foreach_batch,
 )
+
+
+def _start_band_admission_stream(
+    spec,
+    admit,
+    rule: dict,
+    build_params: dict,
+    fn: str,
+    docs: DataFrame,
+    index_path: str,
+    output_path: str,
+    checkpoint_dir: str,
+    *,
+    id_col: str,
+    text_col: str,
+    compact_every: int,
+    max_segments: int,
+    max_delete_batches: int,
+    available_now: bool,
+    query_name: Optional[str],
+    allowed_ids,
+    where: Optional[str],
+    store_cols,
+):
+    """The ONE admission body of the band-row families (MinHash /
+    SimHash, ``operators/_band_index.py``): per micro-batch, bootstrap
+    an EMPTY index when nothing is committed (``build_params`` are the
+    family's encode params), run the family's incremental admitter
+    ``admit`` (``rule`` carries its threshold) with
+    ``update_index=True``, write the survivors, commit the marker, then
+    compact best-effort."""
+    from parq_tools_spark.operators import _band_index as _BI
+
+    if not docs.isStreaming:
+        raise ValueError(
+            f"{fn} needs a streaming DataFrame; use operators."
+            f"{admit.__module__.rsplit('.', 1)[1]}.{admit.__name__} for "
+            "batch ingests"
+        )
+    from parq_tools_spark.operators._index_common import (
+        normalize_allowed_ids,
+    )
+
+    # materialized ONCE, up front: the same allowed set is consumed
+    # by EVERY micro-batch — a one-shot iterable would be exhausted
+    # by batch 1 and hand every later batch an empty (valid!) filter
+    # that silently admits all duplicates
+    allowed_ids = normalize_allowed_ids(allowed_ids)
+
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        # no crash-repair step needed: the index's versioned-manifest
+        # protocol leaves a crashed add/compact as an invisible orphan
+        # segment (swept by the next compaction), never as state a
+        # read path could refuse
+        if batch_id <= _last_applied(spark, index_path, checkpoint_dir):
+            return  # replay of a batch this query already applied
+        if not batch_df.take(1):
+            _commit_marker(spark, index_path, checkpoint_dir, batch_id)
+            return
+        if not _BI.committed(spec, spark, index_path):
+            from parq_tools_spark.operators._index_common import (
+                check_store_cols,
+            )
+
+            # validate here for the clear message — the bare select
+            # would throw UNRESOLVED_COLUMN before write's own check
+            check_store_cols(batch_df, list(store_cols), fn)
+            # bootstrap an EMPTY index (committed manifest, zero band
+            # rows — the index query returns a typed empty relation
+            # for it), so every batch, including the first, takes the
+            # one admission path. The gate is the COMMITTED MANIFEST,
+            # not a params sidecar: a writer crash before the manifest
+            # commit must re-enter this bootstrap, not wedge every
+            # later batch on "no committed index"
+            _BI.public(spec, "write")(
+                batch_df.limit(0).select(id_col, text_col, *store_cols),
+                index_path,
+                id_col=id_col,
+                text_col=text_col,
+                store_cols=store_cols,
+                **build_params,
+            )
+        survivors = admit(
+            spark,
+            index_path,
+            batch_df,
+            text_col=text_col,
+            update_index=True,
+            allowed_ids=allowed_ids,
+            where=where,
+            **rule,
+        )
+        survivors.write.mode("overwrite").parquet(
+            f"{output_path}/batch={batch_id}"
+        )
+        _commit_marker(spark, index_path, checkpoint_dir, batch_id)
+        if compact_every and (batch_id + 1) % compact_every == 0:
+            _BI.compact(spec, spark, index_path)
+        elif max_segments or max_delete_batches:
+            _BI.maybe_compact(
+                spec,
+                spark,
+                index_path,
+                max_segments=max_segments,
+                max_delete_batches=max_delete_batches,
+            )
+
+    return _start_foreach_batch(
+        docs, _process, checkpoint_dir, query_name, available_now
+    )
 
 
 def start_near_dedupe_stream(
@@ -131,102 +243,24 @@ def start_near_dedupe_stream(
     Returns the started ``StreamingQuery``; admitted documents are at
     ``output_path`` (partitioned by ``batch``).
     """
-    if not docs.isStreaming:
-        raise ValueError(
-            "start_near_dedupe_stream needs a streaming DataFrame; use "
-            "operators.dedup.incremental_dedupe for batch ingests"
-        )
-    from parq_tools_spark.operators._index_common import (
-        normalize_allowed_ids,
+    from parq_tools_spark.operators.dedup import (
+        BAND_FAMILY,
+        incremental_dedupe,
     )
 
-    # materialized ONCE, up front: the same allowed set is consumed
-    # by EVERY micro-batch — a one-shot iterable would be exhausted
-    # by batch 1 and hand every later batch an empty (valid!) filter
-    # that silently admits all duplicates
-    allowed_ids = normalize_allowed_ids(allowed_ids)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from parq_tools_spark.operators.dedup import (
-            incremental_dedupe,
-            minhash_index_compact,
-            minhash_index_is_committed,
-            minhash_index_maybe_compact,
-            minhash_index_write,
-        )
-
-        spark = batch_df.sparkSession
-        # no crash-repair step needed: the index's versioned-manifest
-        # protocol leaves a crashed add/compact as an invisible orphan
-        # segment (swept by the next compaction), never as state a
-        # read path could refuse
-        if batch_id <= _last_applied(spark, index_path, checkpoint_dir):
-            return  # replay of a batch this query already applied
-        if not batch_df.take(1):
-            _commit_marker(spark, index_path, checkpoint_dir, batch_id)
-            return
-        if not minhash_index_is_committed(spark, index_path):
-            from parq_tools_spark.operators._index_common import (
-                check_store_cols,
-            )
-
-            # validate here for the clear message — the bare select
-            # would throw UNRESOLVED_COLUMN before write's own check
-            check_store_cols(
-                batch_df, list(store_cols), "start_near_dedupe_stream"
-            )
-            # bootstrap an EMPTY index (committed manifest, zero band
-            # rows — minhash_index_query returns a typed empty
-            # relation for it), so every batch, including the first,
-            # takes the one incremental_dedupe path. The gate is the
-            # COMMITTED MANIFEST, not the params sidecar: a writer
-            # crash between the sidecar write and the manifest commit
-            # must re-enter this bootstrap (minhash_index_write resets
-            # the partial state), not wedge every later batch on
-            # "no committed index"
-            minhash_index_write(
-                batch_df.limit(0).select(id_col, text_col, *store_cols),
-                index_path,
-                id_col=id_col,
-                text_col=text_col,
-                num_hashes=num_hashes,
-                bands=bands,
-                k=k,
-                hash_family=hash_family,
-                store_cols=store_cols,
-            )
-        survivors = incremental_dedupe(
-            spark,
-            index_path,
-            batch_df,
-            text_col=text_col,
-            threshold=threshold,
-            update_index=True,
-            allowed_ids=allowed_ids,
-            where=where,
-        )
-        survivors.write.mode("overwrite").parquet(
-            f"{output_path}/batch={batch_id}"
-        )
-        _commit_marker(spark, index_path, checkpoint_dir, batch_id)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            minhash_index_compact(spark, index_path)
-        elif max_segments or max_delete_batches:
-            minhash_index_maybe_compact(
-                spark,
-                index_path,
-                max_segments=max_segments,
-                max_delete_batches=max_delete_batches,
-            )
-
-    writer = docs.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_band_admission_stream(
+        BAND_FAMILY,
+        incremental_dedupe,
+        dict(threshold=threshold),
+        dict(num_hashes=num_hashes, bands=bands, k=k,
+             hash_family=hash_family),
+        "start_near_dedupe_stream",
+        docs, index_path, output_path, checkpoint_dir,
+        id_col=id_col, text_col=text_col, compact_every=compact_every,
+        max_segments=max_segments, max_delete_batches=max_delete_batches,
+        available_now=available_now, query_name=query_name,
+        allowed_ids=allowed_ids, where=where, store_cols=store_cols,
     )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_semantic_dedupe_stream(
@@ -386,14 +420,9 @@ def start_semantic_dedupe_stream(
                 max_tombstone_frac=max_tombstone_frac,
             )
 
-    writer = vecs.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_foreach_batch(
+        vecs, _process, checkpoint_dir, query_name, available_now
     )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_simhash_dedupe_stream(
@@ -449,83 +478,20 @@ def start_simhash_dedupe_stream(
     Returns the started ``StreamingQuery``; admitted documents are at
     ``output_path`` (partitioned by ``batch``).
     """
-    if not docs.isStreaming:
-        raise ValueError(
-            "start_simhash_dedupe_stream needs a streaming DataFrame; "
-            "use operators.simhash_index.simhash_incremental_dedupe "
-            "for batch ingests"
-        )
-    from parq_tools_spark.operators._index_common import (
-        normalize_allowed_ids,
+    from parq_tools_spark.operators.simhash_index import (
+        BAND_FAMILY,
+        simhash_incremental_dedupe,
     )
 
-    # one materialization for every micro-batch (see
-    # start_near_dedupe_stream)
-    allowed_ids = normalize_allowed_ids(allowed_ids)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from parq_tools_spark.operators.simhash_index import (
-            _sh_vs,
-            simhash_incremental_dedupe,
-            simhash_index_compact,
-            simhash_index_maybe_compact,
-            simhash_index_write,
-        )
-
-        spark = batch_df.sparkSession
-        if batch_id <= _last_applied(spark, index_path, checkpoint_dir):
-            return  # replay of a batch this query already applied
-        if not batch_df.take(1):
-            _commit_marker(spark, index_path, checkpoint_dir, batch_id)
-            return
-        if _sh_vs(spark, index_path).current() is None:
-            from parq_tools_spark.operators._index_common import (
-                check_store_cols,
-            )
-
-            check_store_cols(
-                batch_df, list(store_cols),
-                "start_simhash_dedupe_stream",
-            )
-            simhash_index_write(
-                batch_df.limit(0).select(id_col, text_col, *store_cols),
-                index_path,
-                id_col=id_col,
-                text_col=text_col,
-                bits=bits,
-                n_bands=n_bands,
-                hash_family=hash_family,
-                store_cols=store_cols,
-            )
-        survivors = simhash_incremental_dedupe(
-            spark,
-            index_path,
-            batch_df,
-            text_col=text_col,
-            max_hamming=max_hamming,
-            update_index=True,
-            allowed_ids=allowed_ids,
-            where=where,
-        )
-        survivors.write.mode("overwrite").parquet(
-            f"{output_path}/batch={batch_id}"
-        )
-        _commit_marker(spark, index_path, checkpoint_dir, batch_id)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            simhash_index_compact(spark, index_path)
-        elif max_segments or max_delete_batches:
-            simhash_index_maybe_compact(
-                spark,
-                index_path,
-                max_segments=max_segments,
-                max_delete_batches=max_delete_batches,
-            )
-
-    writer = docs.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_band_admission_stream(
+        BAND_FAMILY,
+        simhash_incremental_dedupe,
+        dict(max_hamming=max_hamming),
+        dict(bits=bits, n_bands=n_bands, hash_family=hash_family),
+        "start_simhash_dedupe_stream",
+        docs, index_path, output_path, checkpoint_dir,
+        id_col=id_col, text_col=text_col, compact_every=compact_every,
+        max_segments=max_segments, max_delete_batches=max_delete_batches,
+        available_now=available_now, query_name=query_name,
+        allowed_ids=allowed_ids, where=where, store_cols=store_cols,
     )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -328,3 +328,38 @@ def test_extract_archive_7z_allows_inward_symlink(tmp_path, monkeypatch):
     arch.write_bytes(b"7z\xbc\xaf\x27\x1c inward")
     out = extract_archive(arch, tmp_path / "out")
     assert (out / "alias").read_text() == "content"
+
+
+def test_footer_schema_nanos_as_long_nested_ns_falls_back(spark, tmp_path):
+    """Under ``nanos_as_long`` only top-level TIMESTAMP(NANOS) columns
+    are rewritten to LongType; a ns timestamp nested in a struct must
+    fall back to inference (None) rather than resolve to a timestamp
+    type the legacy conf would not produce."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from parq_tools_spark.sources.parquet_io import _footer_schema
+
+    ns = pa.timestamp("ns")
+    nested = tmp_path / "nested.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "id": pa.array([1, 2], pa.int64()),
+                "ev": pa.array(
+                    [{"ts": 1_000_000_001}, {"ts": 2_000_000_002}],
+                    pa.struct([("ts", ns)]),
+                ),
+            }
+        ),
+        str(nested),
+    )
+    assert _footer_schema(spark, str(nested), nanos_as_long=True) is None
+
+    flat = tmp_path / "flat.parquet"
+    pq.write_table(
+        pa.table({"ts": pa.array([1_000_000_001], ns)}), str(flat)
+    )
+    schema = _footer_schema(spark, str(flat), nanos_as_long=True)
+    assert schema["ts"].dataType == T.LongType()

@@ -104,3 +104,25 @@ def test_operator_under_reliable_mode_matches_local(reliable_mode, sf_dir):
         map(tuple, ngram_jaccard_pairs(docs, threshold=0.5).collect())
     )
     assert rel == loc
+
+
+def test_failing_mode_conf_read_propagates():
+    """A conf read that raises must surface, never silently fall back
+    to ``local`` (that would quietly drop a ``reliable`` session's
+    fault tolerance)."""
+    from types import SimpleNamespace
+
+    class _BrokenConf:
+        def get(self, key, default=None):
+            raise RuntimeError("conf store unavailable")
+
+    df = SimpleNamespace(sparkSession=SimpleNamespace(conf=_BrokenConf()))
+    with pytest.raises(RuntimeError, match="conf store unavailable"):
+        materialize(df)
+
+
+def test_session_cleans_reliable_checkpoints_by_default(spark):
+    """``get_spark`` defaults the ContextCleaner to delete reliable
+    checkpoint files once their DataFrame is garbage-collected."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"

@@ -137,7 +137,7 @@ def test_bm25_multi_col_per_column_defaults(spark, docs, tmp_path):
 
 
 def test_band_two_col_backfill_scalar_default(spark, docs, tmp_path):
-    """Band families (shared add_band_metadata_col): two columns in
+    """Band families (shared _band_index.add_metadata_col): two columns in
     one call with a SHARED scalar default filling uncovered ids in
     both; one new segment; where= over both == fresh build."""
     from parq_tools_spark.operators.dedup import (
@@ -354,7 +354,7 @@ def test_ann_drop_to_bare_and_guards(spark, emb, tmp_path):
 
 
 def test_band_drop_metadata_col(spark, docs, tmp_path):
-    """MinHash/SimHash (shared drop_band_metadata_cols): dropping one
+    """MinHash/SimHash (shared _band_index.drop_metadata_col): dropping one
     of two columns == fresh one-column build; the dropped column's
     where= raises."""
     from parq_tools_spark.operators.dedup import (

@@ -139,7 +139,7 @@ def test_bm25_add_metadata_col_default_fill_and_extension(
 
 
 def test_band_add_metadata_col_equals_fresh_build(spark, docs, tmp_path):
-    """MinHash/SimHash (shared add_band_metadata_col): first-column
+    """MinHash/SimHash (shared _band_index.add_metadata_col): first-column
     backfill onto bare indexes == fresh store_cols build; band-row
     signatures/fingerprints carried (old files untouched)."""
     from parq_tools_spark.operators.dedup import (

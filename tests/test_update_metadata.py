@@ -295,7 +295,7 @@ def test_update_metadata_facade_dispatch(spark, docs, tmp_path):
     )
     assert out["updated"] == 1
 
-    # band families dispatch too (shared update_band_metadata); a
+    # band families dispatch too (shared _band_index.update_metadata); a
     # store_cols-less index stays a loud error through the facade
     mh = str(tmp_path / "mh")
     minhash_index_write(
