@@ -13,15 +13,16 @@ for the 100 TB regime:
   candidates verified with ``bit_count(xor)``.
 - n-gram Jaccard: exact set similarity via a shingle self-join —
   the verification oracle for the sketch-based paths (SQL-expressible).
-- connected components: iterative min-label propagation entirely in
-  DataFrame joins (no driver-side union-find), bounded by duplicate-
-  cluster diameter (small in practice).
+- connected components: one-task numpy union-find once the edge list
+  fits a partition, after large-star/small-star rounds for larger
+  graphs (never a driver-side graph).
 
 Built-in ``pyspark.sql.functions`` everywhere except the SimHash
-bit-sum, which runs as one vectorized numpy pass inside
-``mapInPandas`` (Arrow-batched; the 63-sum JVM expression tree is
-correct but codegen-hostile). xxhash64 with per-index seed columns
-stands in for a min-wise independent hash family (the same
+bit-sum and the component union-find, which run as vectorized numpy
+passes inside ``mapInPandas`` (Arrow-batched; the 63-sum JVM
+expression tree is correct but codegen-hostile, and a join per
+propagation round pays a job per hop). xxhash64 with per-index seed
+columns stands in for a min-wise independent hash family (the same
 construction datasketch and Spark ML's MinHashLSH use).
 """
 
@@ -768,200 +769,149 @@ def hamming_pairs(
 
 
 # ------------------------------------------------------ components / dedup
+#: Edge lists up to this size finish in ONE task (partition-local
+#: union-find); larger ones first shrink through large-star/small-star
+#: rounds until they fit or converge.
+_CC_LOCAL_EDGES = 500_000
+
+
 def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components of an (id1, id2) edge list -> (id, component).
-
-    Iterative min-label propagation as pure DataFrame joins: each
-    round every vertex adopts the min label among itself and its
-    neighbors; converges in O(cluster diameter) rounds (checked via a
-    cheap count, loop capped at ``max_iter``). Near-dup clusters are
-    shallow, so 3-5 rounds is typical; no driver-side graph state.
-
-    If the graph has NOT converged after ``max_iter`` rounds (cluster
-    diameter > max_iter — e.g. a long duplicate chain), returning the
-    partial labels would silently split components, so this falls back
-    to :func:`connected_components_alternating`, which converges in
-    O(log n) rounds regardless of diameter (a warning is emitted).
-
-    The edge list after near-dup candidate generation is orders of
-    magnitude smaller than the corpus, so the iteration is sized to
-    the graph, not the corpus: edges are counted once and the loop
-    runs on ``ceil(n_edges / 500k)`` hash partitions. Without this, a
-    477-edge graph inherits the corpus's shuffle width and every
-    round pays 32 tasks of pure scheduling overhead; with it, small
-    graphs iterate in single-task jobs while billion-edge graphs
-    still spread across the cluster.
-    """
-    edges = (
-        pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-        .union(pairs.select(F.col("id2").alias("src"), F.col("id1").alias("dst")))
-        .distinct()
-    )
-    edges_cached = edges.cache()
-    n_edges = edges_cached.count()
-    n_parts = max(1, -(-n_edges // 500_000))
-    edges = edges_cached.repartition(n_parts, "src")
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-        .repartition(n_parts, "id")
-    )
-    from pyspark.sql import Observation
-
-    cached: list = []
-    changed = 0
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("nmin"))
-        )
-        # the convergence metric rides the SAME job that fills the
-        # cache (Observation): a separate filter().limit(1).count()
-        # would short-circuit, leaving the cache partial and forcing
-        # the next iteration to recompute the missing partitions
-        obs = Observation()
-        updated = (
-            labels.join(neighbor_min, "id", "left")
-            .withColumn(
-                "new_component", F.least(F.col("component"), F.col("nmin"))
-            )
-            .select(
-                "id", F.coalesce("new_component", "component").alias("component"),
-                F.col("component").alias("_old"),
-            )
-            .observe(
-                obs,
-                F.count(
-                    F.when(F.col("component") != F.col("_old"), 1)
-                ).alias("changed"),
-            )
-        ).cache()
-        cached.append(updated)
-        updated.count()
-        changed = int(obs.get["changed"])
-        labels = updated.drop("_old")
-        if changed == 0:
-            break
-    if changed != 0:
-        # unconverged labels would silently split components — hand the
-        # graph to the diameter-independent O(log n) algorithm instead
-        import warnings
-
-        for df in cached:
-            df.unpersist()
-        edges_cached.unpersist()
-        warnings.warn(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(cluster diameter exceeds max_iter); falling back to "
-            "connected_components_alternating",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return connected_components_alternating(pairs)
-    # materialize the final labels, then release iteration caches
-    labels = labels.cache()
-    labels.count()
-    for df in cached:
-        df.unpersist()
-    edges_cached.unpersist()
-    return labels
-
-
-def connected_components_alternating(
     pairs: DataFrame,
     max_iter: int = 50,
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star.
+    """Connected components of an (id1, id2) edge list -> (id, component)
+    with component = min id of the component. Every id in ``pairs``
+    appears once, a self-loop pair ``(a, a)`` included (it labels
+    itself); the id type is the pair columns' type.
 
-    Same contract as :func:`connected_components` — (id, component)
-    with component = min id of the component — but converges in
-    O(log n) rounds instead of O(diameter) (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14). Use for
-    adversarially deep graphs (long duplicate chains), where min-label
-    propagation would need one round per hop.
-
-    large-star hangs every neighbor larger than a node off the
-    minimum of its neighborhood; small-star re-points each node's
-    smaller neighbors at that minimum. Both are one groupBy + one
-    join; a round is the pair of them. Convergence = the edge
-    multiset stops changing (order-insensitive xxhash fingerprint +
-    count, one tiny agg per round). localCheckpoint truncates the
-    iterative plan lineage so round N's plan does not embed rounds
-    1..N-1.
+    Sized to the graph, not the corpus. One pass normalizes the edges
+    (``u = least, v = greatest``, distinct) and counts them. An edge
+    list of at most ``_CC_LOCAL_EDGES`` edges is labelled by ONE
+    partition-local numpy union-find in ``mapInPandas``: one job and
+    one task, whatever the cluster diameter. Larger graphs first run
+    alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14: O(log n)
+    rounds regardless of diameter), each materialized and counted in
+    one job, until the edge list fits one task — or converges, when
+    every component is a star rooted at its min id and the labels read
+    straight off the edges. Running out of ``max_iter`` rounds before
+    either raises instead of returning unconverged labels.
     """
     from parq_tools_spark.operators._index_common import eager_stats
 
-    edges, _est = eager_stats(
+    def _counted(e: DataFrame):
+        # count + order-insensitive fingerprint of the edge set, in the
+        # job that materializes it; bit_xor cannot overflow under ANSI
+        # mode and edges are distinct, so nothing self-cancels
+        e, st = eager_stats(
+            e, n=F.count(F.lit(1)), h=F.expr("bit_xor(xxhash64(u, v))")
+        )
+        return e, (int(st["n"]), st["h"])
+
+    edges, fp = _counted(
         pairs.select(
             F.least("id1", "id2").alias("u"), F.greatest("id1", "id2").alias("v")
         )
-        .filter(F.col("u") != F.col("v"))
-        .distinct(),
-        n=F.count(F.lit(1)),
+        .filter(F.col("u").isNotNull())
+        .distinct()
     )
-    n_edges = int(_est["n"])
-    n_parts = max(1, -(-n_edges // 500_000))
-    edges = edges.repartition(n_parts, "u")
-
-    def _fingerprint(e: DataFrame):
-        # bit_xor is order-insensitive and cannot overflow under ANSI
-        # mode (edges are distinct, so no self-cancellation)
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    def _large_star(e: DataFrame) -> DataFrame:
-        nb = e.select("u", "v").union(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        mins = (
-            nb.groupBy("u")
-            .agg(F.min("v").alias("_mv"))
-            .select("u", F.least("_mv", F.col("u")).alias("m"))
-        )
-        return (
-            nb.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("u"), F.col("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    def _small_star(e: DataFrame) -> DataFrame:
-        # direct every edge from its larger endpoint x to smaller y
-        nb = e.select(F.greatest("u", "v").alias("x"), F.least("u", "v").alias("y"))
-        mins = nb.groupBy("x").agg(F.min("y").alias("m"))
-        relinked = (
-            nb.join(mins, "x")
-            .filter(F.col("y") != F.col("m"))
-            .select(F.col("m").alias("u"), F.col("y").alias("v"))
-        )
-        roots = mins.select(F.col("m").alias("u"), F.col("x").alias("v"))
-        return (
-            relinked.union(roots)
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-
-    prev = _fingerprint(edges)
-    for _ in range(max_iter):
-        edges = _mat(_small_star(_large_star(edges)))
-        cur = _fingerprint(edges)
-        if cur == prev:
-            break
-        prev = cur
-    # converged: every component is a star (root=u=min, child=v)
-    labels = edges.select(F.col("v").alias("id"), F.col("u").alias("component")).union(
-        edges.select(F.col("u").alias("id"), F.col("u").alias("component"))
+    rounds = 0
+    while fp[0] > _CC_LOCAL_EDGES:
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"connected_components: {max_iter} large-star/small-star "
+                f"rounds left {fp[0]} edges (one-task limit "
+                f"{_CC_LOCAL_EDGES}) and the graph had not converged; "
+                "raise max_iter"
+            )
+        edges, nxt = _counted(_small_star(_large_star(edges)))
+        if nxt == fp:
+            # converged: every component is a star (root u = min id);
+            # a root's self-loop (u, u) survives the rounds, so
+            # self-loop-only ids keep their row
+            return edges.select(
+                F.explode(F.array("u", "v")).alias("id"),
+                F.col("u").alias("component"),
+            ).distinct()
+        fp, rounds = nxt, rounds + 1
+    id_type = edges.schema["u"].dataType
+    out_schema = T.StructType(
+        [T.StructField("id", id_type), T.StructField("component", id_type)]
     )
-    return labels.distinct()
+
+    def _union_find(batches):
+        import pandas as pd
+
+        parts = list(batches)
+        if not parts:
+            return
+        e = pd.concat(parts, ignore_index=True)
+        # dense codes in id order, so a smaller code is a smaller id
+        codes, ids = pd.factorize(
+            pd.concat([e["u"], e["v"]], ignore_index=True), sort=True
+        )
+        u, v = codes[: len(e)], codes[len(e):]
+        parent = np.arange(len(ids))
+        while True:
+            # every node points at its root (parent[x] <= x throughout);
+            # hook each crossing edge's larger root under the smaller
+            pu, pv = parent[u], parent[v]
+            live = pu != pv
+            if not live.any():
+                break
+            pu, pv = pu[live], pv[live]
+            np.minimum.at(parent, np.maximum(pu, pv), np.minimum(pu, pv))
+            while True:  # pointer jumping until every node sees its root
+                pp = parent[parent]
+                if np.array_equal(pp, parent):
+                    break
+                parent = pp
+        ids = np.asarray(ids)
+        yield pd.DataFrame({"id": ids, "component": ids[parent]})
+
+    # at most 2 x _CC_LOCAL_EDGES ids: joins against the labels
+    # broadcast them instead of shuffling the other side
+    return F.broadcast(
+        edges.coalesce(1).mapInPandas(_union_find, schema=out_schema)
+    )
+
+
+#: The same function: the name stays for callers that asked for the
+#: O(log n) large-star/small-star variant explicitly.
+connected_components_alternating = connected_components
+
+
+def _large_star(e: DataFrame) -> DataFrame:
+    """Hang every neighbor larger than a node off the minimum of its
+    neighborhood. A self-loop (u, u) stays only on a local minimum."""
+    nb = e.select("u", "v").union(
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+    mins = (
+        nb.groupBy("u")
+        .agg(F.min("v").alias("_mv"))
+        .select("u", F.least("_mv", F.col("u")).alias("m"))
+    )
+    return (
+        nb.join(mins, "u")
+        .filter(F.col("v") >= F.col("u"))
+        .select(F.col("m").alias("u"), F.col("v"))
+        .distinct()
+    )
+
+
+def _small_star(e: DataFrame) -> DataFrame:
+    """Re-point each node's smaller neighbors (and the node) at the
+    minimum of them; a node whose only edge is its self-loop keeps it."""
+    nb = e.select(F.greatest("u", "v").alias("x"), F.least("u", "v").alias("y"))
+    mins = nb.groupBy("x").agg(F.min("y").alias("m"))
+    relinked = (
+        nb.join(mins, "x")
+        .filter(F.col("y") != F.col("m"))
+        .select(F.col("m").alias("u"), F.col("y").alias("v"))
+    )
+    roots = mins.select(F.col("m").alias("u"), F.col("x").alias("v"))
+    return relinked.union(roots).distinct()
 
 
 def dedupe_near_duplicates(
@@ -974,20 +924,15 @@ def dedupe_near_duplicates(
     ``pairs``, keep only the min-id document; rows in no component are
     kept untouched (left-anti join against the non-representative set).
 
-    ``cc_algorithm``: "propagation" (min-label, O(diameter) rounds —
-    right for the shallow clusters near-dup detection produces) or
-    "alternating" (large-star/small-star, O(log n) rounds — right for
-    adversarially deep graphs).
+    ``cc_algorithm`` accepts "propagation" and "alternating"; both name
+    the one :func:`connected_components` implementation.
     """
-    if cc_algorithm == "propagation":
-        comps = connected_components(pairs)
-    elif cc_algorithm == "alternating":
-        comps = connected_components_alternating(pairs)
-    else:
+    if cc_algorithm not in ("propagation", "alternating"):
         raise ValueError(
             f"unknown cc_algorithm {cc_algorithm!r}; "
             "expected 'propagation' or 'alternating'"
         )
+    comps = connected_components(pairs)
     losers = comps.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )

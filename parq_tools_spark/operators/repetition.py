@@ -12,9 +12,9 @@ Two tiers, chosen by what they cost at 100 TB:
   :func:`with_line_repetition_stats` are MAP-ONLY: pure array
   expressions (``split`` / ``array_distinct`` / ``filter``), zero
   shuffle, whole-stage codegen'd. Use these as the first-pass filter.
-- :func:`ngram_repetition_stats` needs per-document n-gram counts, so
-  it explodes and aggregates: two exchanges, both keyed by document
-  (cardinality bounded by document length, never by corpus size).
+- :func:`ngram_repetition_stats` is MAP-ONLY too: per-document
+  n-gram counts come from linear folds over one sorted gram array,
+  the same folds as :func:`with_gopher_repetition_stats`.
 
 Every metric is expressible identically in ANSI SQL (DuckDB oracle):
 splits are on explicit separators / ``\\s+`` runs, and tie-breaks are
@@ -23,7 +23,7 @@ total orders (count desc, gram asc).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -187,6 +187,21 @@ def with_line_repetition_stats(
     )
 
 
+def _capped_tokens(full_toks: Column, max_tokens_per_doc):
+    """``(tokens, truncated)``: the token array sliced to
+    ``max_tokens_per_doc`` (grams never span the cut; no re-join +
+    re-split of the text) and a real-boolean flag for capped rows.
+    NULL text -> NULL array -> NULL ``size()``, coalesced so the flag
+    never silently drops a row from a ``~truncated`` filter."""
+    if max_tokens_per_doc is None:
+        return full_toks, F.lit(False)
+    if max_tokens_per_doc <= 0:
+        raise ValueError("max_tokens_per_doc must be positive")
+    return F.slice(full_toks, 1, max_tokens_per_doc), F.coalesce(
+        F.size(full_toks) > max_tokens_per_doc, F.lit(False)
+    )
+
+
 def ngram_repetition_stats(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -206,76 +221,59 @@ def ngram_repetition_stats(
     - ``dup_ngram_char_frac``: characters in n-grams occurring at
       least twice over characters in all n-gram occurrences.
 
-    Scale shape: explode n-grams -> ``groupBy(doc, gram)`` count (one
-    exchange on the composite key) -> per-doc rank + aggregate (one
-    exchange on the doc key). Work per key is bounded by document
-    length; there is no corpus-wide key, so skew follows document
-    size, which the token-budget sharding pass already bounds.
-    Documents with fewer than ``n`` words are preserved with zero
-    fractions and a NULL ``top_ngram``.
+    Map-only: one sorted gram array per document, read by the
+    :func:`_top_run`, :func:`_total_chars` and
+    :func:`_dup_occurrence_chars` folds that back
+    :func:`with_gopher_repetition_stats` — no explode, no exchange,
+    O(L log L) per document. The result has ONE ROW PER INPUT ROW
+    (``id_col`` passed through); with unique ids, as every caller and
+    oracle has, that is one row per document. Documents with fewer
+    than ``n`` words (or NULL text) get zero counts and fractions and
+    a NULL ``top_ngram``.
 
-    ``max_tokens_per_doc`` guards the per-document rank window (all
-    of one document's distinct grams land in one task): one
-    pathological multi-GB document would otherwise own a task for
-    hours. Tokens beyond the cap are TRUNCATED before gram
-    generation — the stats then describe the document's head, with
-    ``_nc`` (the char denominator) still the full document, so a
-    truncated giant reads as LOW repetition rather than silently
-    pretending full coverage. The output's ``truncated`` column flags
-    every capped document, so a filter downstream can quarantine them
-    instead of passing a repetitive giant on its head's low score.
-    Pass ``None`` to disable (``truncated`` is then always false).
+    ``max_tokens_per_doc`` bounds the per-row sort: one pathological
+    multi-GB document would otherwise own a task for hours. Tokens
+    beyond the cap are TRUNCATED before gram generation — the stats
+    then describe the document's head, with the character denominator
+    still the full document, so a truncated giant reads as LOW
+    repetition rather than silently pretending full coverage. The
+    output's ``truncated`` column flags every capped document, so a
+    filter downstream can quarantine them instead of passing a
+    repetitive giant on its head's low score. Pass ``None`` to disable
+    (``truncated`` is then always false).
     """
-    full_toks = words_array(F.col(text_col))
-    toks = full_toks
-    if max_tokens_per_doc is not None:
-        if max_tokens_per_doc <= 0:
-            raise ValueError("max_tokens_per_doc must be positive")
-        # slice the token stream directly (grams never span the cut);
-        # no re-join + re-split of the text
-        toks = F.slice(full_toks, 1, max_tokens_per_doc)
-        # NULL text -> NULL token array -> size() is NULL: coalesce so
-        # the flag is a real boolean (a NULL here would silently drop
-        # such docs from a `~truncated` quarantine filter)
-        trunc = F.coalesce(
-            F.size(full_toks) > max_tokens_per_doc, F.lit(False)
-        )
-    else:
-        trunc = F.lit(False)
-    grams = df.select(
+    toks, trunc = _capped_tokens(
+        words_array(F.col(text_col)), max_tokens_per_doc
+    )
+    s, t, nc, tc = (
+        _free_temp_name(df, f"_ng_{k}") for k in ("s", "t", "nc", "tc")
+    )
+    # sorted grams, then the folds over them, as materialized columns
+    # (the ``_rep_sorted`` discipline: lambdas read attributes, not a
+    # re-evaluated sort); NULL text sorts to the empty array
+    out = df.select(
         F.col(id_col),
-        F.length(text_col).alias("_nc"),
-        trunc.alias("_trunc"),
-        F.explode_outer(ngrams_from_tokens(toks, n)).alias("gram"),
-    )
-    counts = grams.groupBy(id_col, "_nc", "_trunc", "gram").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("c").desc(), F.col("gram").asc()
-    )
-    ranked = counts.withColumn("_rn", F.row_number().over(w))
-    gram_chars = (F.col("c") * F.length("gram")).cast("double")
-    is_gram = F.col("gram").isNotNull()
-    top = (F.col("_rn") == 1) & is_gram
-    return ranked.groupBy(id_col).agg(
-        F.max(F.when(top, F.col("gram"))).alias("top_ngram"),
-        F.coalesce(F.max(F.when(top, F.col("c"))), F.lit(0)).alias(
-            "top_ngram_count"
-        ),
+        F.greatest(F.length(text_col), F.lit(1)).cast("double").alias(nc),
+        trunc.alias("truncated"),
         F.coalesce(
-            F.max(
-                F.when(top, gram_chars)
-                / F.greatest(F.col("_nc"), F.lit(1)).cast("double")
-            ),
-            F.lit(0.0),
-        ).alias("top_ngram_char_frac"),
-        F.coalesce(
-            F.sum(F.when(is_gram & (F.col("c") >= 2), gram_chars))
-            / F.sum(F.when(is_gram, gram_chars)),
-            F.lit(0.0),
-        ).alias("dup_ngram_char_frac"),
-        F.max("_trunc").alias("truncated"),
+            F.array_sort(ngrams_from_tokens(toks, n)),
+            F.array().cast("array<string>"),
+        ).alias(s),
+    ).withColumns({t: _top_run(F.col(s)), tc: _total_chars(F.col(s))})
+    top, total = F.col(t), F.col(tc)
+    return out.select(
+        id_col,
+        top["bg"].alias("top_ngram"),
+        top["best"].alias("top_ngram_count"),
+        F.when(
+            top["best"] > 0,
+            (top["best"] * F.length(top["bg"])).cast("double") / F.col(nc),
+        ).otherwise(F.lit(0.0)).alias("top_ngram_char_frac"),
+        F.when(
+            total > 0,
+            _dup_occurrence_chars(F.col(s)).cast("double") / total.cast("double"),
+        ).otherwise(F.lit(0.0)).alias("dup_ngram_char_frac"),
+        "truncated",
     )
 
 
@@ -377,9 +375,8 @@ def with_gopher_repetition_stats(
       appearing >= 2 times over characters in all n-gram occurrences.
 
     The per-n-gram counts come from a linear fold over the SORTED
-    gram array (:func:`_top_run` / neighbor comparisons) instead of
-    the explode -> groupBy -> rank shape
-    (:func:`ngram_repetition_stats`) — O(L log L) per document with
+    gram array (:func:`_top_run` / neighbor comparisons) instead of an
+    explode -> groupBy -> rank shape — O(L log L) per document with
     zero exchanges, which is what makes the COMPOSITE filter a single
     scan.
 
@@ -404,16 +401,7 @@ def with_gopher_repetition_stats(
     t = F.coalesce(F.col(text_col), F.lit(""))
     nc = F.greatest(F.length(t), F.lit(1)).cast("double")
 
-    full_toks = words_array(t)
-    toks = full_toks
-    trunc = F.lit(False)
-    if max_tokens_per_doc is not None:
-        if max_tokens_per_doc <= 0:
-            raise ValueError("max_tokens_per_doc must be positive")
-        toks = F.slice(full_toks, 1, max_tokens_per_doc)
-        trunc = F.coalesce(
-            F.size(full_toks) > max_tokens_per_doc, F.lit(False)
-        )
+    toks, trunc = _capped_tokens(words_array(t), max_tokens_per_doc)
 
     # Temp names must not collide with caller columns: withColumns
     # would silently OVERWRITE (and the trailing drops then remove) a

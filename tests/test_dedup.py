@@ -200,23 +200,108 @@ def test_ngram_jaccard_auto_noop_on_benign_corpus(corpus):
 
 
 def test_connected_components_nonconvergence_fallback(spark):
-    """A 30-hop chain with max_iter=3 cannot converge via propagation; the
-    operator must fall back to the O(log n) algorithm, not return split
-    components."""
-    import warnings
-
+    """A 30-hop chain with max_iter=3 would take 30 propagation rounds;
+    the labels must still be one component, not split components."""
     from parq_tools_spark.operators.dedup import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id1 long, id2 long"
     )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        labels = connected_components(chain, max_iter=3).collect()
-    assert any("did not converge" in str(w.message) for w in caught)
+    labels = connected_components(chain, max_iter=3).collect()
     comps = {r.component for r in labels}
     assert comps == {0}  # one component, min-id label
     assert len(labels) == 31
+
+
+def _union_find_labels(edges):
+    """Reference labels: a plain Python union-find, min id per component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+@pytest.fixture()
+def random_graph(spark):
+    import random
+
+    rng = random.Random(20261019)
+    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
+    # a 30-clique (435 edges) shrinks to 29 under star rounds, so a
+    # 300-edge limit takes one round and then the union-find task;
+    # self-loops label themselves
+    edges += [(1000 + i, 1000 + j) for i in range(30) for j in range(i + 1, 30)]
+    edges += [(2000, 2000), (2001, 2001), (5, 5), (2001, 2001)]
+    return edges, spark.createDataFrame(edges, "id1 long, id2 long")
+
+
+@pytest.mark.parametrize("local_edges", [None, 0, 300])
+def test_connected_components_matches_union_find(
+    spark, random_graph, monkeypatch, local_edges
+):
+    """One-task union-find (default limit), star rounds to convergence
+    (limit 0) and star rounds then union-find (limit 300) all give the
+    reference labels, with the input's id type."""
+    from parq_tools_spark.operators import dedup
+
+    if local_edges is not None:
+        monkeypatch.setattr(dedup, "_CC_LOCAL_EDGES", local_edges)
+    edges, pairs = random_graph
+    out = dedup.connected_components(pairs)
+    assert out.schema["id"].dataType.simpleString() == "bigint"
+    assert out.schema["component"].dataType.simpleString() == "bigint"
+    rows = out.collect()
+    got = {r.id: r.component for r in rows}
+    assert len(got) == len(rows)  # one row per id
+    want = _union_find_labels(edges)
+    assert got == want
+    assert got[2000] == 2000 and got[2001] == 2001
+
+
+def test_connected_components_star_rounds_exhausted_raise(spark, monkeypatch):
+    """Star rounds that run out before the graph converges or fits one
+    task must raise, not return unconverged labels."""
+    from parq_tools_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_CC_LOCAL_EDGES", 0)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "id1 long, id2 long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter"):
+        dedup.connected_components(chain, max_iter=1)
+    comps = dedup.connected_components(chain, max_iter=20).collect()
+    assert len(comps) == 64
+    assert all(r.component == 0 for r in comps)
+
+
+def test_dedupe_near_duplicates_job_count(spark, corpus):
+    """A small graph finishes in a handful of jobs: the edge pass, one
+    union-find task and the anti-join, not a job per propagation round."""
+    import time
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (3, 3)], "id1 long, id2 long"
+    ).localCheckpoint(eager=True)
+    group = f"cc_jobs_{time.monotonic_ns()}"
+    sc.setJobGroup(group, "dedupe_near_duplicates job count")
+    try:
+        ids = sorted(r.doc_id for r in dedupe_near_duplicates(corpus, pairs).collect())
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert ids == [0, 3]
+    assert 0 < len(jobs) <= 6
 
 
 def test_portable_minhash_matches_duckdb(spark, corpus):

@@ -150,11 +150,11 @@ def test_word_repetition_is_map_only(spark, sf_dir):
     assert "MapInPandas" not in plan  # pure array expressions
 
 
-def test_repetition_ngram_two_doc_keyed_exchanges(spark, sf_dir):
-    """Explode -> (doc,gram) count -> doc window/agg: exactly the two
-    document-keyed exchanges, nothing corpus-wide."""
+def test_repetition_ngram_is_map_only(spark, sf_dir):
+    """Sorted gram array + linear folds per document: no explode, no
+    exchange, no join."""
     plan = _plan(spark, "repetition_ngram", sf_dir)
-    assert _count(plan, "Exchange") == 2
+    assert _count(plan, "Exchange") == 0
     assert _count(plan, "SortMergeJoin") == 0
 
 

@@ -2,6 +2,7 @@
 
 import os
 import shutil
+import time
 
 import pytest
 
@@ -92,14 +93,28 @@ def test_running_user_totals_stateful(spark, sf_dir, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    got = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in spark.sql(
-            "SELECT user_id, max(n_events) n_events, max(total_value) total_value "
-            "FROM running_totals GROUP BY user_id"
-        ).collect()
-    }
+    # running_user_totals sets a processing-time state timeout, so the
+    # query plans a no-data batch after every batch: neither availableNow
+    # nor processAllAvailable() ever sees it finish. Its first no-data
+    # batch means every available file was consumed; stop it there.
+    try:
+        deadline, seen_rows = time.monotonic() + 120, False
+        while q.isActive:
+            rows = [p["numInputRows"] for p in q.recentProgress]
+            seen_rows = seen_rows or any(rows)
+            if seen_rows and rows[-1] == 0:
+                break
+            assert time.monotonic() < deadline, "query never drained its input"
+            time.sleep(0.2)
+        got = {
+            r.user_id: (r.n_events, r.total_value)
+            for r in spark.sql(
+                "SELECT user_id, max(n_events) n_events, max(total_value) total_value "
+                "FROM running_totals GROUP BY user_id"
+            ).collect()
+        }
+    finally:
+        q.stop()
     expected = {
         r.user_id: (r.n, r.s)
         for r in _batch_events(spark, sf_dir)

@@ -3,13 +3,14 @@
 Usage:
     SPARK_GRAFT_CPUS=8 python tools/dump_plans.py <suffix> <query> [query ...]
 
-Writes plans/r17/<query>_<suffix>.txt for each named query (suffix is
-"before" or "after"). The DataFrame is built through the same
+Writes plans/<rev>/<query>_<suffix>.txt for each named query, where
+<rev> is $SPARK_GRAFT_PLANS_REV (default r18) and the suffix is
+"before" or "after". The DataFrame is built through the same
 ``__spark_entry__.queries()`` registry the driver uses, so the dumped
 plan is exactly the benched/oracled plan. Queries whose entry builds
 an on-disk index per call dump the plan of the RETURNED DataFrame
-(the serve phase) — the build-phase plans are locked separately in
-PLANS_r1x.txt.
+(the serve phase); nothing dumps or checks build-phase plans — the
+structural plan locks live in tests/test_plan_quality.py.
 """
 
 from __future__ import annotations
