@@ -101,6 +101,29 @@ def with_row_ordinal(df: DataFrame, name: str = _ROW_ID) -> DataFrame:
     )
 
 
+def _moves_rows(df: DataFrame) -> bool:
+    """True when ``df``'s plan holds a window: the one node a
+    user-assigned column can add that moves rows between partitions."""
+    jvm = df.sparkSession._jvm
+    window = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.WINDOW()
+    return df._jdf.queryExecution().analyzed().containsPattern(window)
+
+
+def _in_row_order(df: DataFrame) -> DataFrame:
+    """``df`` sorted by ``_row_id``, without a shuffle where possible.
+
+    :func:`with_row_ordinal` leaves partition *p* holding only ordinals
+    below partition *p+1*, and the rewrites ``LazySparkDF`` makes —
+    filters, projections, broadcast joins — keep every row in its
+    partition, so sorting within partitions yields the global order and
+    collection reads the partitions in order. A plan that moved rows
+    (:func:`_moves_rows`) takes the global sort.
+    """
+    if _moves_rows(df):
+        return df.orderBy(_ROW_ID)
+    return df.sortWithinPartitions(_ROW_ID)
+
+
 def _index_cols_from_pandas_metadata(
     path: str, available: Sequence[str]
 ) -> list[str]:
@@ -793,25 +816,30 @@ class LazySparkDF:
 
     # ------------------------------------------------------------ plan ops
     def _ordered(self) -> DataFrame:
-        return self._df.orderBy(_ROW_ID)
+        return _in_row_order(self._df)
 
     def _densified(self) -> DataFrame:
         """Return ``_df`` with ``_row_id`` re-ranked to a dense [0, n).
 
         After ``filter``/``query`` the surviving ordinals are sparse;
-        positional operations need dense ranks. Re-ranking is
-        distributed: range-repartition on ``_row_id`` (partition *p*
-        holds smaller ordinals than *p+1*), sort within partitions,
-        then reuse the per-partition offset trick — one range shuffle,
-        never a single-partition window. Dense frames skip all of it.
+        positional operations need dense ranks. Partitions still hold
+        ascending ordinal ranges (see :func:`_in_row_order`), so each
+        partition is sorted in place and the per-partition offset trick
+        re-ranks it — no shuffle, and every later execution reads the
+        layout the offsets were counted on. A plan that moved rows takes
+        the global sort, pinned by ``materialize()``: a range shuffle
+        re-samples its bounds on each execution, which would leave the
+        counted offsets stale. Dense frames skip all of it.
         """
         if self._dense:
             return self._df
-        n_parts = max(int(self._spark.conf.get("spark.sql.shuffle.partitions")), 1)
-        ranged = self._df.repartitionByRange(
-            n_parts, F.col(_ROW_ID)
-        ).sortWithinPartitions(_ROW_ID)
-        return with_row_ordinal(ranged.drop(_ROW_ID), _ROW_ID)
+        if _moves_rows(self._df):
+            from parq_tools_spark.operators._index_common import materialize
+
+            ordered = materialize(self._df.orderBy(_ROW_ID))
+        else:
+            ordered = self._df.sortWithinPartitions(_ROW_ID)
+        return with_row_ordinal(ordered.drop(_ROW_ID), _ROW_ID)
 
     def head(self, n: int = 5) -> pd.DataFrame:
         return self._ordered().select(*self._user_columns).limit(n).toPandas()
@@ -922,7 +950,7 @@ class LazySparkDF:
                         (F.col(_ROW_ID) >= offset)
                         & (F.col(_ROW_ID) < offset + chunk_size)
                     )
-                    .orderBy(_ROW_ID)
+                    .transform(_in_row_order)
                     .select(*self._user_columns)
                     .toPandas()
                 )

@@ -59,6 +59,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from parq_tools_spark.operators.index_facade import INDEX_MARKERS
 from parq_tools_spark.operators.similarity import DEFAULT_ROUND_TO
 
 __all__ = [
@@ -79,13 +80,10 @@ __all__ = [
     "semantic_dedupe_incremental",
 ]
 
-_ANN_MARKER = "_ann_manifest.json"
-
-
 def _ann_vs(spark, path: str):
     from parq_tools_spark.sources.statefs import VersionedState
 
-    return VersionedState(spark, path, _ANN_MARKER)
+    return VersionedState(spark, path, INDEX_MARKERS["ann"])
 
 
 def _ann_manifest(spark, path: str, version=None):
@@ -1442,7 +1440,7 @@ def ann_index_maybe_compact(
     return maybe_compact(
         spark,
         path,
-        _ANN_MARKER,
+        INDEX_MARKERS["ann"],
         lambda: ann_index_compact(spark, path, force=True),
         max_segments=max_segments,
         max_tombstone_frac=max_tombstone_frac,

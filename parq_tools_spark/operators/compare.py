@@ -6,11 +6,26 @@ compares raw Arrow buffer sha256 hashes per column batch — a byte-level
 definition that is unreproducible in any other engine (SURVEY §7.4 #5).
 Here equality is **logical**:
 
-- schema: column sets + Spark SQL types;
+- schema: column sets + Spark SQL types (read off the plans, no job);
 - row counts;
-- content: symmetric ``exceptAll`` (order-insensitive multiset
-  equality) plus per-column commutative ``xxhash64`` fingerprints that
-  localize *which* columns differ, computed in one aggregation pass.
+- content: order-insensitive multiset equality of the rows, plus
+  per-column commutative ``xxhash64`` fingerprints that localize
+  *which* columns differ.
+
+Counts, fingerprints and the multiset check come from ONE aggregation
+chain: the two frames are unioned with a side tag and grouped by every
+comparable column (``_n1``/``_n2`` = each side's rows per distinct
+row); one global aggregate over those groups then yields both row
+counts, each side's fingerprints (``sum(_n * xxhash64(string form))``,
+equal to the per-row sum) and the number of groups whose counts
+differ. ``content_match`` is "no group differs".
+
+Grouping keys are exact up to each value's string form, the form the
+fingerprints hash. Spark's grouping equality is coarser for floats
+(``-0.0`` = ``0.0``, one NaN), maps (entry order) and non-binary
+collations, so those columns are also grouped by their string form:
+rows that differ only in the sign of a zero are different rows, as in
+the reference's byte-level hashes.
 
 The result dict keeps the reference's report shape (match booleans +
 detail lists, ``parq_compare.py:30-38``) so callers can switch over.
@@ -20,8 +35,9 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from parq_tools_spark.sources.parquet_io import read_parquet
 
@@ -33,21 +49,62 @@ __all__ = [
 ]
 
 
+def _fingerprint(col: Column) -> Column:
+    """One row's contribution to a column fingerprint, in decimal(38,0)
+    so the sum cannot overflow under ANSI mode."""
+    return F.xxhash64(col.cast("string")).cast("decimal(38,0)")
+
+
 def column_fingerprints(df: DataFrame, columns: Sequence[str]) -> dict[str, int]:
     """Order-insensitive per-column fingerprint in ONE pass.
 
     ``sum(xxhash64(col))`` is commutative, so it is stable under any
     row order/partitioning — a distributed analogue of the reference's
     per-column hash stream, minus the order sensitivity. All columns
-    are fingerprinted in a single ``agg`` (one job, one scan). The sum
-    is taken in decimal(38,0) so it cannot overflow under ANSI mode.
+    are fingerprinted in a single ``agg`` (one job, one scan).
     """
-    aggs = [
-        F.sum(F.xxhash64(F.col(c).cast("string")).cast("decimal(38,0)")).alias(c)
-        for c in columns
-    ]
+    aggs = [F.sum(_fingerprint(F.col(c))).alias(c) for c in columns]
     row = df.agg(*aggs).collect()[0]
     return {c: row[c] for c in columns}
+
+
+def _groups_coarser_than_string(dt: T.DataType) -> bool:
+    """True when Spark's grouping equality can merge two values of this
+    type whose string forms differ: floats (signed zero), maps (entry
+    order), non-binary collations, and any type containing them."""
+    if isinstance(dt, (T.FloatType, T.DoubleType, T.MapType)):
+        return True
+    if isinstance(dt, T.StringType):
+        return dt.collation != "UTF8_BINARY"
+    if isinstance(dt, T.ArrayType):
+        return _groups_coarser_than_string(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return any(_groups_coarser_than_string(f.dataType) for f in dt.fields)
+    return False
+
+
+def _group_keys(
+    df: DataFrame, columns: Sequence[str]
+) -> tuple[list[Column], list[str]]:
+    """``(key expressions, per-column fingerprint source)`` for grouping
+    ``df`` by ``columns``. A float/double column is keyed by its string
+    form alone (``cast(double as string)`` round-trips, so it is
+    exact); any other type that groups coarser than its string form is
+    keyed by both (its string form alone can collide, e.g. a struct's
+    ``{a, b}`` rendering). Keys are renamed ``__k<i>`` so no user column
+    can clash with the tag and count columns."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    keys, sources = [], []
+    for i, c in enumerate(columns):
+        dt, name = types[c], f"__k{i}"
+        if isinstance(dt, (T.FloatType, T.DoubleType)):
+            keys.append(F.col(c).cast("string").alias(name))
+        elif _groups_coarser_than_string(dt):
+            keys += [F.col(c).alias(f"{name}r"), F.col(c).cast("string").alias(name)]
+        else:
+            keys.append(F.col(c).alias(name))
+        sources.append(name)
+    return keys, sources
 
 
 def compare_dataframes(
@@ -56,7 +113,12 @@ def compare_dataframes(
     check_content: bool = True,
     columns: Optional[Sequence[str]] = None,
 ) -> dict:
-    """Compare two DataFrames; returns the reference-shaped report dict."""
+    """Compare two DataFrames; returns the reference-shaped report dict.
+
+    One job chain (a grouped and a global aggregate, one collected row)
+    yields the counts, fingerprints and multiset check; without content
+    comparison it is a single global count of both sides.
+    """
     cols1, cols2 = set(df1.columns), set(df2.columns)
     common = [c for c in df1.columns if c in cols2]
     if columns is not None:
@@ -65,7 +127,33 @@ def compare_dataframes(
     dtype_mismatches = {
         c: (dtypes1[c], dtypes2[c]) for c in common if dtypes1[c] != dtypes2[c]
     }
-    n1, n2 = df1.count(), df2.count()
+    comparable = (
+        [c for c in common if c not in dtype_mismatches] if check_content else []
+    )
+
+    keys, sources = _group_keys(df1, comparable)
+    side = "__first"
+    both = df1.select(*keys, F.lit(True).alias(side)).union(
+        df2.select(*keys, F.lit(False).alias(side))
+    )
+    g1, g2 = F.col("__n1"), F.col("__n2")
+    grouped = both.groupBy(*[k for k in both.columns if k != side]).agg(
+        F.count_if(F.col(side)).alias("__n1"),
+        F.count_if(~F.col(side)).alias("__n2"),
+    )
+    # hash each group's key once, then weight it by each side's count:
+    # the decimal sums run over groups, not rows
+    hashed = grouped.select(
+        g1, g2, *[_fingerprint(F.col(s)).alias(s) for s in sources]
+    )
+    row = hashed.agg(
+        F.coalesce(F.sum(g1), F.lit(0)).alias("n1"),
+        F.coalesce(F.sum(g2), F.lit(0)).alias("n2"),
+        F.count_if(g1 != g2).alias("n_diff"),
+        *[F.sum(g1 * F.col(s)).alias(f"{s}_1") for s in sources],
+        *[F.sum(g2 * F.col(s)).alias(f"{s}_2") for s in sources],
+    ).collect()[0]
+    n1, n2 = row["n1"], row["n2"]
 
     report = {
         "row_counts": (n1, n2),
@@ -79,40 +167,13 @@ def compare_dataframes(
     }
     if not check_content or not common:
         return report
-
-    comparable = [c for c in common if c not in dtype_mismatches]
     if not comparable:
         report["content_match"] = False
         return report
-    fp1 = column_fingerprints(df1, comparable)
-    fp2 = column_fingerprints(df2, comparable)
-    report["column_match"] = {c: fp1[c] == fp2[c] for c in comparable}
-
-    if report["row_count_match"] and all(report["column_match"].values()):
-        # fingerprints can collide across columns jointly; confirm with
-        # multiset equality: per-row-value counts full-outer-joined on
-        # the grouping keys. One shuffle per side (the join reuses the
-        # aggs' hash partitioning — no extra exchange) and ONE action,
-        # vs two full exceptAll passes for the symmetric difference.
-        # The join must use NULL-SAFE equality (eqNullSafe): groupBy
-        # treats NULL keys as one group, but a null-unsafe join would
-        # never match them, reporting identical NULL-bearing frames as
-        # different (exceptAll's set semantics treat NULLs as equal).
-        a, b = df1.select(*comparable), df2.select(*comparable)
-        ka = a.groupBy(*comparable).agg(F.count(F.lit(1)).alias("_n1"))
-        kb = b.groupBy(*comparable).agg(F.count(F.lit(1)).alias("_n2")).select(
-            *[F.col(c).alias(f"_r_{c}") for c in comparable], "_n2"
-        )
-        cond = None
-        for c in comparable:
-            term = ka[c].eqNullSafe(kb[f"_r_{c}"])
-            cond = term if cond is None else (cond & term)
-        diff = ka.join(kb, cond, "full").filter(
-            F.coalesce("_n1", F.lit(0)) != F.coalesce("_n2", F.lit(0))
-        )
-        report["content_match"] = diff.limit(1).count() == 0
-    else:
-        report["content_match"] = False
+    report["column_match"] = {
+        c: row[f"{s}_1"] == row[f"{s}_2"] for c, s in zip(comparable, sources)
+    }
+    report["content_match"] = row["n_diff"] == 0
     return report
 
 

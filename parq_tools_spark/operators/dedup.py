@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 
 from parq_tools_spark.operators import _band_index as _BI
 from parq_tools_spark.operators._index_common import materialize as _mat
+from parq_tools_spark.operators.index_facade import INDEX_MARKERS
 
 __all__ = [
     "word_shingles",
@@ -1188,7 +1189,7 @@ def _minhash_manifest_params(spark, path: str, vs, m) -> dict:
 BAND_FAMILY = _BI.BandFamily(
     family="minhash",
     module=__name__,
-    marker="_index_manifest.json",
+    marker=INDEX_MARKERS["minhash"],
     reserved=("signature", "band", "bhash"),
     band_rows=_minhash_band_rows,
     params=_minhash_manifest_params,

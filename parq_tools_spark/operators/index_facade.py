@@ -33,7 +33,8 @@ from typing import Optional
 
 __all__ = ["open_index", "IndexHandle", "INDEX_MARKERS"]
 
-#: family -> the manifest marker filename its VersionedState commits.
+#: family -> the manifest marker filename its VersionedState commits;
+#: the one table of markers (each family module reads its own entry).
 INDEX_MARKERS = {
     "ann": "_ann_manifest.json",
     "bm25": "_bm25_manifest.json",

@@ -37,6 +37,8 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from parq_tools_spark.operators.index_facade import INDEX_MARKERS
+
 __all__ = [
     "tokenize",
     "term_stats",
@@ -432,13 +434,11 @@ def bm25_topk_batch(
 # committed version — never a torn mix), and stamps that version in
 # the output's ``index_version`` column.
 
-_BM25_MARKER = "_bm25_manifest.json"
-
 
 def _bm25_vs(spark, path: str):
     from parq_tools_spark.sources.statefs import VersionedState
 
-    return VersionedState(spark, path, _BM25_MARKER)
+    return VersionedState(spark, path, INDEX_MARKERS["bm25"])
 
 
 def _bm25_manifest(spark, path: str, version=None):
@@ -1847,7 +1847,7 @@ def bm25_index_maybe_compact(
     return maybe_compact(
         spark,
         path,
-        _BM25_MARKER,
+        INDEX_MARKERS["bm25"],
         lambda: bm25_index_compact(spark, path, force=True),
         max_segments=max_segments,
         max_tombstone_frac=max_tombstone_frac,

@@ -65,6 +65,7 @@ __all__ = [
 ]
 
 from parq_tools_spark.operators import _band_index as _BI  # noqa: E402
+from parq_tools_spark.operators.index_facade import INDEX_MARKERS  # noqa: E402
 from parq_tools_spark.operators._index_common import (  # noqa: E402
     check_self_exclusion_types as _check_excl_types,
     id_field as _id_field,
@@ -144,7 +145,7 @@ def _simhash_band_rows(df, p: dict, text_col: str, meta_cols) -> DataFrame:
 BAND_FAMILY = _BI.BandFamily(
     family="simhash",
     module=__name__,
-    marker="_simhash_manifest.json",
+    marker=INDEX_MARKERS["simhash"],
     reserved=("simhash", "band", "bval"),
     band_rows=_simhash_band_rows,
 )

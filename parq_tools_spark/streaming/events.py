@@ -271,6 +271,14 @@ def running_user_totals(events: DataFrame, timeout_minutes: int = 60) -> DataFra
     built-in windows can't express the semantics): state is one
     (count, sum) pair per user, evicted after ``timeout_minutes`` of
     processing-time inactivity — bounded state at any user cardinality.
+
+    Because the timeout runs on processing time, Spark plans a no-data
+    batch after every batch to fire expirations, so a query over this
+    operator never finishes by itself: under ``trigger(availableNow=True)``
+    or ``once`` it keeps running, and ``processAllAvailable()`` never
+    returns. To drain a bounded input (a backfill), poll
+    ``query.recentProgress`` until a batch with ``numInputRows == 0``
+    follows the data batches, read the sink, then ``query.stop()``.
     """
     import pandas as pd
 

@@ -1,5 +1,9 @@
 """Compare tests (reference parity: test/compare/)."""
 
+import time
+
+import pytest
+
 from parq_tools_spark.operators.compare import compare_dataframes, compare_parquet_files
 
 
@@ -47,6 +51,9 @@ def test_dtype_mismatch_reported(spark):
     report = compare_dataframes(df1, df2)
     assert report["dtype_mismatches"] == {"k": ("int", "double")}
     assert not report["schema_match"]
+    # every common column is mismatched: nothing left to compare
+    assert report["column_match"] == {}
+    assert report["content_match"] is False
 
 
 def test_compare_identical_frames_with_nulls(spark):
@@ -59,11 +66,137 @@ def test_compare_identical_frames_with_nulls(spark):
     )
     r = compare_dataframes(df, spark.createDataFrame(df.collect(), df.schema))
     assert r["content_match"] is True
+    assert r["column_match"] == {"k": True, "v": True}
     # and a genuine NULL-pattern difference is still caught
     df2 = spark.createDataFrame(
         [(1, "a"), (2, "x"), (None, None)], "k int, v string"
     )
-    assert compare_dataframes(df, df2)["content_match"] is False
+    r = compare_dataframes(df, df2)
+    assert r["column_match"] == {"k": True, "v": False}
+    assert r["content_match"] is False
+
+
+NAN = float("nan")
+KV, KS = "k int, v double", "k int, s string"
+SD = "s struct<a:int,d:double>"
+MAP = "m map<string,double>"
+
+
+@pytest.mark.parametrize(
+    "schema, rows1, rows2, kwargs, column_match, content_match",
+    [
+        # the sign of a zero is part of the value, as in the reference's
+        # byte-level hashes
+        pytest.param(
+            KV, [(1, -0.0)], [(1, 0.0)], {}, {"k": True, "v": False}, False,
+            id="negative-zero",
+        ),
+        # rows that differ only by where the signed zeros sit: every
+        # fingerprint matches, the multiset check tells them apart
+        pytest.param(
+            KV, [(1, -0.0), (2, 0.0)], [(1, 0.0), (2, -0.0)], {},
+            {"k": True, "v": True}, False,
+            id="negative-zero-swapped",
+        ),
+        pytest.param(
+            KV, [(1, NAN), (2, None)], [(2, None), (1, NAN)], {},
+            {"k": True, "v": True}, True,
+            id="nan-equals-nan",
+        ),
+        # values swapped across two rows: each column holds the same
+        # multiset, the rows do not
+        pytest.param(
+            KS, [(1, "a"), (2, "b")], [(1, "b"), (2, "a")], {},
+            {"k": True, "s": True}, False,
+            id="values-swapped-across-rows",
+        ),
+        pytest.param(
+            KS, [(1, "a")], [(1, "b")], {"check_content": False}, {}, None,
+            id="no-content-check",
+        ),
+        pytest.param(
+            KS, [(1, "a")], [(1, "b")], {"columns": ["k"]}, {"k": True}, True,
+            id="columns-subset",
+        ),
+        pytest.param("k int", [], [(1,)], {}, {"k": False}, False, id="empty-first"),
+        pytest.param("k int", [], [], {}, {"k": True}, True, id="both-empty"),
+        # a nested value whose string form collides ("{x, y, z, 1.0}")
+        pytest.param(
+            "s struct<a:string,b:string,d:double>",
+            [(("x, y", "z", 1.0),)],
+            [(("x", "y, z", 1.0),)],
+            {},
+            {"s": True},
+            False,
+            id="struct-string-collision",
+        ),
+        pytest.param(
+            SD, [((1, -0.0),)], [((1, 0.0),)], {}, {"s": False}, False,
+            id="struct-negative-zero",
+        ),
+        pytest.param(
+            f"{SD}, a array<double>",
+            [(None, [1.0, None]), ((None, None), None)],
+            [((None, None), None), (None, [1.0, None])],
+            {},
+            {"s": True, "a": True},
+            True,
+            id="nested-nulls",
+        ),
+        pytest.param(
+            MAP, [({"a": 1.0},)], [({"a": 1.0},)], {}, {"m": True}, True, id="map"
+        ),
+        pytest.param(
+            MAP, [({"a": -0.0},)], [({"a": 0.0},)], {}, {"m": False}, False,
+            id="map-negative-zero",
+        ),
+        pytest.param(
+            "f float", [(1.5,), (-0.0,)], [(-0.0,), (1.5,)], {}, {"f": True}, True,
+            id="float",
+        ),
+    ],
+)
+def test_compare_report_matrix(
+    spark, schema, rows1, rows2, kwargs, column_match, content_match
+):
+    df1 = spark.createDataFrame(rows1, schema)
+    df2 = spark.createDataFrame(rows2, schema)
+    r = compare_dataframes(df1, df2, **kwargs)
+    assert r["row_counts"] == (len(rows1), len(rows2))
+    assert r["row_count_match"] is (len(rows1) == len(rows2))
+    assert r["schema_match"] is True
+    assert r["column_match"] == column_match
+    assert r["content_match"] is content_match
+
+
+def test_compare_no_common_columns(spark):
+    df1 = spark.createDataFrame([(1,)], "a int")
+    r = compare_dataframes(df1, spark.createDataFrame([(1,), (2,)], "b int"))
+    assert r["row_counts"] == (1, 2)
+    assert r["columns_only_in_first"] == ["a"]
+    assert r["columns_only_in_second"] == ["b"]
+    assert r["column_match"] == {}
+    assert r["content_match"] is None
+
+
+def test_compare_dataframes_job_count(spark, wide_tables):
+    """Counts, fingerprints and the multiset check come from one grouped
+    and one global aggregate: at most three jobs, not a count, a
+    fingerprint scan and an aggregation per side plus a join."""
+    from parq_tools_spark.sources.parquet_io import read_parquet
+
+    sc = spark.sparkContext
+    df1 = read_parquet(spark, wide_tables["wide_1"])
+    df2 = read_parquet(spark, wide_tables["wide_1"])
+    group = f"compare_jobs_{time.monotonic_ns()}"
+    sc.setJobGroup(group, "compare_dataframes job count")
+    try:
+        r = compare_dataframes(df1, df2)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert r["content_match"] is True
+    assert 0 < len(jobs) <= 3
 
 
 def test_group_overlap_report_exact_and_approximate(spark):

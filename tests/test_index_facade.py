@@ -167,6 +167,22 @@ def test_open_index_errors(spark, docs, tmp_path):
     assert set(INDEX_MARKERS) == {"ann", "bm25", "minhash", "simhash"}
 
 
+def test_family_markers_come_from_index_markers(spark, tmp_path):
+    """Each family commits under the marker the facade sniffs for."""
+    from parq_tools_spark.operators import _band_index, dedup, simhash_index
+    from parq_tools_spark.operators.ann_index import _ann_vs
+    from parq_tools_spark.operators.search import _bm25_vs
+
+    path = str(tmp_path / "idx")
+    got = {
+        "ann": _ann_vs(spark, path).marker_name,
+        "bm25": _bm25_vs(spark, path).marker_name,
+        "minhash": _band_index._vs(dedup.BAND_FAMILY, spark, path).marker_name,
+        "simhash": _band_index._vs(simhash_index.BAND_FAMILY, spark, path).marker_name,
+    }
+    assert got == INDEX_MARKERS
+
+
 def test_facade_query_passes_filtered_retrieval_kwargs(
     spark, sf_dir, tmp_path
 ):

@@ -256,6 +256,66 @@ def test_filtered_array_setitem_aligns_positionally(spark, wide_tables):
     assert pdf.tag.tolist() == ["t0", "t1", "t2", "t3"]
 
 
+def test_row_order_matches_pandas_across_partitions(spark, tmp_path):
+    """Every ordered read-out keeps pandas row order on a multi-partition
+    frame that went through a DSL filter, ``.loc`` masking and
+    positional assignment — the rewrites that sort each partition by
+    ``_row_id`` instead of running a global sort."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(5)
+    n = 2000
+    pdf = pd.DataFrame({"k": rng.permutation(n), "v": rng.normal(size=n)})
+    # createDataFrame slices pandas rows into partitions in order, so
+    # the facade's scan order is pandas order
+    base = spark.createDataFrame(pdf)
+    assert base.rdd.getNumPartitions() > 1
+    lazy = LazySparkDF(spark, df=base).filter("k >= 200")
+    lazy = lazy.loc[lazy["v"] > -1.0]
+    expect = pdf[(pdf.k >= 200) & (pdf.v > -1.0)].reset_index(drop=True)
+    pd.testing.assert_frame_equal(lazy.to_pandas(), expect)
+
+    lazy["pos"] = list(range(len(expect)))
+    expect["pos"] = range(len(expect))
+    pd.testing.assert_frame_equal(lazy.head(7), expect.head(7))
+    pd.testing.assert_frame_equal(lazy.to_pandas(), expect)
+    chunks = list(lazy.iter_row_chunks(chunk_size=97))
+    pd.testing.assert_frame_equal(pd.concat(chunks, ignore_index=True), expect)
+    for single_file in (False, True):
+        out = str(tmp_path / f"out_{single_file}")
+        lazy.to_parquet(out, single_file=single_file)
+        got = pq.read_table(out).to_pandas()
+        pd.testing.assert_frame_equal(got, expect)
+
+
+def test_row_order_after_window_assignment(spark):
+    """A user-assigned window expression moves rows between partitions;
+    the ordered read-out must still come back in row order."""
+    import numpy as np
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(6)
+    pdf = pd.DataFrame({"k": rng.permutation(500)})
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")  # keep the window's hash partitions apart
+    try:
+        lazy = LazySparkDF(spark, df=spark.createDataFrame(pdf))
+        lazy["n"] = F.count(F.lit(1)).over(Window.partitionBy(F.col("k") % 7))
+        got = lazy.to_pandas()
+        kept = lazy.filter("k >= 100")
+        kept["pos"] = list(range(400))
+        got_kept = kept.to_pandas()
+    finally:
+        spark.conf.set(key, prev)
+    assert got.k.tolist() == pdf.k.tolist()
+    assert got.n.tolist() == [int((pdf.k % 7 == k % 7).sum()) for k in pdf.k]
+    assert got_kept.k.tolist() == pdf.k[pdf.k >= 100].tolist()
+    assert got_kept.pos.tolist() == list(range(400))
+
+
 def test_setitem_size_cap(spark, wide_tables, monkeypatch):
     import parq_tools_spark.lazy as lazy_mod
 
