@@ -29,8 +29,8 @@ scan order once, at construction, and used for positional alignment of
 array-like assignment and ordered iteration. After a ``filter``/
 ``query`` the surviving ``_row_id`` values are sparse; positional
 operations (chunk iteration, array-like assignment, boolean-array
-masks) re-rank them into a dense ordinal first — distributed, via
-range repartitioning (no single-partition window).
+masks) re-rank them into a dense ordinal first — distributed, each
+partition re-ranked in place (no single-partition window).
 """
 
 from __future__ import annotations
@@ -102,11 +102,18 @@ def with_row_ordinal(df: DataFrame, name: str = _ROW_ID) -> DataFrame:
 
 
 def _moves_rows(df: DataFrame) -> bool:
-    """True when ``df``'s plan holds a window: the one node a
-    user-assigned column can add that moves rows between partitions."""
-    jvm = df.sparkSession._jvm
-    window = jvm.org.apache.spark.sql.catalyst.trees.TreePattern.WINDOW()
-    return df._jdf.queryExecution().analyzed().containsPattern(window)
+    """True when ``df``'s plan can move rows between partitions. The
+    rewrites ``LazySparkDF`` makes cannot; a user expression can, in two
+    ways: a window, or a subquery (``IN``/``EXISTS`` in a mask or an
+    assigned SQL string), which the optimizer turns into a join that
+    shuffles the frame unless its other side is broadcast. Both show as
+    a pattern bit on the analyzed plan (``PLAN_EXPRESSION`` covers every
+    subquery expression), so the check plans nothing."""
+    patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.containsPattern(patterns.WINDOW()) or plan.containsPattern(
+        patterns.PLAN_EXPRESSION()
+    )
 
 
 def _in_row_order(df: DataFrame) -> DataFrame:
@@ -116,8 +123,8 @@ def _in_row_order(df: DataFrame) -> DataFrame:
     below partition *p+1*, and the rewrites ``LazySparkDF`` makes —
     filters, projections, broadcast joins — keep every row in its
     partition, so sorting within partitions yields the global order and
-    collection reads the partitions in order. A plan that moved rows
-    (:func:`_moves_rows`) takes the global sort.
+    collection reads the partitions in order. A plan that may have
+    moved rows (:func:`_moves_rows`) takes the global sort.
     """
     if _moves_rows(df):
         return df.orderBy(_ROW_ID)

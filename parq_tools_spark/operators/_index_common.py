@@ -40,7 +40,18 @@ __all__ = [
     "resolve_cdc_with_meta",
     "apply_cdc_meta",
     "read_committed",
+    "INDEX_MARKERS",
 ]
+
+#: family -> the manifest marker filename its VersionedState commits;
+#: the one table of markers (each family module reads its own entry,
+#: and ``index_facade`` sniffs paths for them).
+INDEX_MARKERS = {
+    "ann": "_ann_manifest.json",
+    "bm25": "_bm25_manifest.json",
+    "minhash": "_index_manifest.json",
+    "simhash": "_simhash_manifest.json",
+}
 
 def _committed_schema(spark, path: str, files):
     """The exact Spark schema of a committed parquet artifact,

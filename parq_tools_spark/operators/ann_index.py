@@ -59,7 +59,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from parq_tools_spark.operators.index_facade import INDEX_MARKERS
+from parq_tools_spark.operators._index_common import INDEX_MARKERS
 from parq_tools_spark.operators.similarity import DEFAULT_ROUND_TO
 
 __all__ = [

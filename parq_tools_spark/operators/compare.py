@@ -118,6 +118,12 @@ def compare_dataframes(
     One job chain (a grouped and a global aggregate, one collected row)
     yields the counts, fingerprints and multiset check; without content
     comparison it is a single global count of both sides.
+
+    There is no early exit: frames whose counts or fingerprints differ
+    still shuffle every distinct row, so a mismatching pair costs what a
+    matching one does. Measured on 40k lineitem rows (``local[4]``), a
+    map-side count-and-fingerprint pre-check would save about 0.1 s on a
+    mismatching pair and cost about 0.4 s on every matching one.
     """
     cols1, cols2 = set(df1.columns), set(df2.columns)
     common = [c for c in df1.columns if c in cols2]

@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parq_tools_spark.operators import _band_index as _BI
+from parq_tools_spark.operators._index_common import INDEX_MARKERS
 from parq_tools_spark.operators._index_common import materialize as _mat
-from parq_tools_spark.operators.index_facade import INDEX_MARKERS
 
 __all__ = [
     "word_shingles",

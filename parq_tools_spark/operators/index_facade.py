@@ -31,16 +31,11 @@ from __future__ import annotations
 
 from typing import Optional
 
-__all__ = ["open_index", "IndexHandle", "INDEX_MARKERS"]
+# the one marker table lives with the protocol every family imports;
+# re-exported here for callers that sniff paths
+from parq_tools_spark.operators._index_common import INDEX_MARKERS
 
-#: family -> the manifest marker filename its VersionedState commits;
-#: the one table of markers (each family module reads its own entry).
-INDEX_MARKERS = {
-    "ann": "_ann_manifest.json",
-    "bm25": "_bm25_manifest.json",
-    "minhash": "_index_manifest.json",
-    "simhash": "_simhash_manifest.json",
-}
+__all__ = ["open_index", "IndexHandle", "INDEX_MARKERS"]
 
 
 def _ops(family: str) -> dict:

@@ -37,7 +37,7 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from parq_tools_spark.operators.index_facade import INDEX_MARKERS
+from parq_tools_spark.operators._index_common import INDEX_MARKERS
 
 __all__ = [
     "tokenize",

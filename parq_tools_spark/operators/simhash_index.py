@@ -65,7 +65,7 @@ __all__ = [
 ]
 
 from parq_tools_spark.operators import _band_index as _BI  # noqa: E402
-from parq_tools_spark.operators.index_facade import INDEX_MARKERS  # noqa: E402
+from parq_tools_spark.operators._index_common import INDEX_MARKERS  # noqa: E402
 from parq_tools_spark.operators._index_common import (  # noqa: E402
     check_self_exclusion_types as _check_excl_types,
     id_field as _id_field,

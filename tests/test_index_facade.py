@@ -168,8 +168,9 @@ def test_open_index_errors(spark, docs, tmp_path):
 
 
 def test_family_markers_come_from_index_markers(spark, tmp_path):
-    """Each family commits under the marker the facade sniffs for."""
-    from parq_tools_spark.operators import _band_index, dedup, simhash_index
+    """Each family commits under the marker the facade sniffs for, read
+    from the one table in the protocol module."""
+    from parq_tools_spark.operators import _band_index, _index_common, dedup, simhash_index
     from parq_tools_spark.operators.ann_index import _ann_vs
     from parq_tools_spark.operators.search import _bm25_vs
 
@@ -181,6 +182,7 @@ def test_family_markers_come_from_index_markers(spark, tmp_path):
         "simhash": _band_index._vs(simhash_index.BAND_FAMILY, spark, path).marker_name,
     }
     assert got == INDEX_MARKERS
+    assert INDEX_MARKERS is _index_common.INDEX_MARKERS
 
 
 def test_facade_query_passes_filtered_retrieval_kwargs(

@@ -316,6 +316,41 @@ def test_row_order_after_window_assignment(spark):
     assert got_kept.pos.tolist() == list(range(400))
 
 
+def test_row_order_after_subquery_mask(spark):
+    """An IN-subquery mask becomes a semi join; without a broadcast it
+    hash-shuffles the frame, so the read-out must take the global sort."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    rng = np.random.default_rng(7)
+    pdf = pd.DataFrame({"k": rng.permutation(500)})
+    spark.createDataFrame(pd.DataFrame({"k": range(100, 500)})).createOrReplaceTempView(
+        "lazy_keep_keys"
+    )
+    keys = ("spark.sql.adaptive.coalescePartitions.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    prev = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], "false")  # keep the join's hash partitions apart
+    spark.conf.set(keys[1], "-1")
+    try:
+        lazy = LazySparkDF(spark, df=spark.createDataFrame(pdf))
+        kept = lazy.loc[F.expr("k IN (SELECT k FROM lazy_keep_keys)")]
+        got = kept.to_pandas()
+        head = kept.head(9)
+        kept["pos"] = list(range(400))
+        got_pos = kept.to_pandas()
+        chunks = pd.concat(kept.iter_row_chunks(chunk_size=61), ignore_index=True)
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+        spark.catalog.dropTempView("lazy_keep_keys")
+    want = pdf.k[pdf.k >= 100].tolist()
+    assert got.k.tolist() == want
+    assert head.k.tolist() == want[:9]
+    assert got_pos.k.tolist() == want
+    assert got_pos.pos.tolist() == list(range(400))
+    assert chunks.k.tolist() == want and chunks.pos.tolist() == list(range(400))
+
+
 def test_setitem_size_cap(spark, wide_tables, monkeypatch):
     import parq_tools_spark.lazy as lazy_mod
 
