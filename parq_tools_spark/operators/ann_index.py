@@ -6,8 +6,8 @@ queries over a 100 TB corpus stop paying a full re-encode per call,
 which is what the per-call :func:`~parq_tools_spark.operators.
 similarity.ivf_pq_topk` costs).
 
-On-disk layout (``sources/statefs.py`` — the exact protocol of the
-BM25 index, ``operators/search.py:362``):
+On-disk layout (``sources/statefs.py`` — the segment-index protocol
+the MinHash and SimHash families share, ``operators/_band_index.py``):
 
 - ``path/v=<n>/_ann_manifest.json`` — commit marker (created
   exclusively, LAST): params, the id column's type, ``n_vecs``, the
@@ -25,15 +25,20 @@ BM25 index, ``operators/search.py:362``):
   the broadcast-small centroid table), so the scan prunes to
   ~nprobe/n_cells of the index directories before reading a byte.
 
-Lifecycle (same semantics as the BM25 index): ``build`` commits a
-fresh generation NON-destructively alongside any live one (readers
-of the previous manifest get a one-cycle grace); ``add`` encodes a
-new batch under the FROZEN model (the standard IVF-PQ ingest — the
-quantization grid never moves between rebuilds, so old and new codes
-score identically) and commits one new immutable segment; ``compact``
-rewrites the segment list per cell with no shuffle; a crash anywhere
-is an invisible orphan no manifest references — readers never raise,
-nothing renames live data, object-store-clean.
+Lifecycle: ``build`` commits a fresh generation NON-destructively
+alongside any live one (readers of the previous manifest get a
+one-cycle grace); ``add`` encodes a new batch under the FROZEN model
+(the standard IVF-PQ ingest — the quantization grid never moves
+between rebuilds, so old and new codes score identically) and commits
+one new immutable segment; ``compact`` rewrites the segment list per
+cell with no shuffle; a crash anywhere is an invisible orphan no
+manifest references — readers never raise, nothing renames live data,
+object-store-clean. Every lifecycle op past build is the ONE shared
+implementation in ``operators/_band_index.py``, bound to this
+module's :data:`INDEX_FAMILY` (``cell`` partitions, one row per
+vector, the ``n_vecs`` counter, the model file, salted cell writes);
+this module keeps model I/O, build, encode, retrain, serving and
+semantic dedupe.
 
 Staleness contract: a query scores with ONE committed version's model
 and segments (never a torn mix) and stamps that version in the
@@ -52,6 +57,7 @@ the brute-force baseline exactly (the ``ann_index_equiv`` gate).
 
 from __future__ import annotations
 
+import json
 from typing import Optional
 
 import numpy as np
@@ -59,8 +65,29 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from parq_tools_spark.operators._index_common import INDEX_MARKERS
-from parq_tools_spark.operators.similarity import DEFAULT_ROUND_TO
+from parq_tools_spark.operators import _band_index as _BI
+from parq_tools_spark.operators._index_common import (
+    INDEX_MARKERS,
+    NO_DEFAULT as _NO_DEFAULT,
+    apply_allowed_ids,
+    check_self_exclusion_types,
+    check_store_cols,
+    id_field as _id_field,
+    id_field_json as _id_field_json,
+    materialize as _mat,
+    retention as _retention,
+    tag as _tag,
+)
+from parq_tools_spark.operators.similarity import (
+    DEFAULT_ROUND_TO,
+    _hashseed_rows,
+    _with_centroid_cells,
+    adc_score,
+    cosine_similarity_col,
+    opq_rotation,
+    pq_codebooks,
+    pq_encode_with_cells,
+)
 
 __all__ = [
     "ann_index_build",
@@ -80,102 +107,8 @@ __all__ = [
     "semantic_dedupe_incremental",
 ]
 
-def _ann_vs(spark, path: str):
-    from parq_tools_spark.sources.statefs import VersionedState
-
-    return VersionedState(spark, path, INDEX_MARKERS["ann"])
-
-
-def _ann_manifest(spark, path: str, version=None):
-    vs = _ann_vs(spark, path)
-    cur, m = _resolve_manifest(
-        vs,
-        path,
-        version,
-        what="ann index",
-        build_hint="; build one with ann_index_build",
-    )
-    return vs, cur, m
-
-
-from parq_tools_spark.operators._index_common import (  # noqa: E402
-    id_field as _id_field,
-    id_field_json as _id_field_json,
-    materialize as _mat,
-    resolve_manifest as _resolve_manifest,
-    retention as _retention,
-    tag as _tag,
-)
-
-
-def _ann_sweep_orphans(vs, path: str) -> None:
-    """Drop seg-/del-/model- entries no surviving manifest references
-    (crashed operations, superseded generations past reader grace)."""
-    import json
-
-    referenced = set()
-    for n, committed in vs.versions():
-        if committed:
-            m = json.loads(vs.read_marker(n))
-            referenced.update(m["segments"])
-            referenced.add(m["model"])
-            referenced.update(e["dir"] for e in _delete_entries(m))
-    for entry, is_dir, _ in vs.fs.list_status(path):
-        if (
-            entry.startswith(("seg-", "del-"))
-            and is_dir
-            and entry not in referenced
-        ):
-            vs.fs.delete(f"{path}/{entry}")
-        if entry.startswith("model-") and not is_dir and entry not in referenced:
-            vs.fs.delete(f"{path}/{entry}")
-
-
-from parq_tools_spark.operators._index_common import (  # noqa: E402
-    NO_DEFAULT as _NO_DEFAULT,
-    delete_batches as _ann_delete_batches_impl,
-    delete_entries as _delete_entries,
-    read_committed as _read_committed,
-    visible_scan as _ann_visible_scan,
-)
-
-
-def _ann_delete_batches(spark, path: str, m: dict, id_col: str) -> list:
-    """Pending tombstones, version-scoped — ONE shared definition
-    with the BM25 index (:func:`~parq_tools_spark.operators.
-    _index_common.delete_batches`): a tombstone hides an id's code
-    rows only in segments committed at or before its ``upto``
-    version, so a later re-add/upsert is immediately visible with no
-    compaction in between."""
-    return _ann_delete_batches_impl(spark, path, m)
-
-
-def _ann_visible_ids(spark, path: str, m: dict, id_col: str):
-    """Visible vec ids (the ANN twin of the band families'
-    ``_band_index.visible_ids``): union of tombstone-folded per-segment id
-    scans, or None on an index with no live segment files. NOT
-    de-duplicated — callers that join against a small batch first
-    keep the distinct on the post-join (batch-sized) side."""
-    from functools import reduce
-
-    fs = _ann_vs(spark, path).fs
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-    if not live:
-        return None
-    batches = _ann_delete_batches(spark, path, m, id_col)
-    return reduce(
-        DataFrame.unionByName,
-        [
-            _ann_visible_scan(spark, path, s, batches, id_col)
-            .select(id_col)
-            for s in live
-        ],
-    )
-
 
 def _write_model(fs, path: str, name: str, centroids, codebooks, rotation):
-    import json
-
     fs.write_text(
         f"{path}/{name}",
         json.dumps(
@@ -193,8 +126,6 @@ def _write_model(fs, path: str, name: str, centroids, codebooks, rotation):
 
 
 def _read_model(fs, path: str, m: dict):
-    import json
-
     mdl = json.loads(fs.read_text(f"{path}/{m['model']}"))
     rot = mdl["rotation"]
     return (
@@ -204,20 +135,54 @@ def _read_model(fs, path: str, m: dict):
     )
 
 
-def _write_codes_segment(
-    coded: DataFrame, seg_path: str, id_col: str, cell_task_splits: int = 1
-) -> None:
-    """The ANN instance of the shared skew-bounded segment write
-    (:func:`~parq_tools_spark.operators._index_common.
-    write_salted_segment`): cell-keyed shuffle, id-sorted files,
-    ``cell_task_splits`` salting for hot cells."""
-    from parq_tools_spark.operators._index_common import (
-        write_salted_segment,
+def _encode(df: DataFrame, p: dict, vec_col: str, model) -> DataFrame:
+    """ONE fused encode+assign pass over the embedding column under
+    ``model`` (codes and cell share each Arrow batch, so no id-join
+    glues them back). The segment schema is an index-wide invariant:
+    every batch stores (or doesn't store) exact vectors and carries
+    the ``store_cols`` exactly as the build did."""
+    centroids, codebooks, rot = model
+    return pq_encode_with_cells(
+        df,
+        centroids,
+        codebooks,
+        id_col=p["id_col"],
+        vec_col=vec_col,
+        round_to=p["round_to"],
+        rotation=rot,
+        keep_vec=bool(p.get("store_vectors")),
+        meta_cols=p.get("store_cols", []),
     )
 
-    write_salted_segment(
-        coded, seg_path, "cell", [id_col], id_col, cell_task_splits
-    )
+
+#: The vector-ANN family on the shared segment-index lifecycle:
+#: ``(id, *store_cols, codes[, vec], cell)`` rows, one per vector,
+#: under ``_ann_manifest.json`` commits that count ``n_vecs`` and name
+#: the frozen model file.
+INDEX_FAMILY = _BI.IndexFamily(
+    family="ann",
+    module=__name__,
+    marker=INDEX_MARKERS["ann"],
+    reserved=("codes", "cell", "vec"),
+    encode=_encode,
+    part="cell",
+    build="build",
+    query="topk",
+    one_row_per_id=True,
+    value_key="vec_col",
+    rows_key="n_vecs",
+    model=_read_model,
+    splits_key="cell_task_splits",
+    dup_note=" (a duplicate would append twice and corrupt n_vecs)",
+)
+
+
+def _ann_vs(spark, path: str):
+    return _BI._vs(INDEX_FAMILY, spark, path)
+
+
+def _ann_manifest(spark, path: str, version=None):
+    return _BI.manifest(INDEX_FAMILY, spark, path, version)
 
 
 def ann_index_build(
@@ -312,8 +277,6 @@ def ann_index_build(
     costs planning time, not a metadata join). Every subsequent
     ingest must carry the columns (validated loudly); compaction and
     retraining carry them forward."""
-    import json
-
     if keep_versions < 1:
         raise ValueError("keep_versions must be >= 1")
     if cell_task_splits != "auto" and (
@@ -324,26 +287,14 @@ def ann_index_build(
         raise ValueError(
             "cell_task_splits must be a positive int or 'auto'"
         )
-
-    from parq_tools_spark.operators.similarity import (
-        _hashseed_rows,
-        opq_rotation,
-        pq_codebooks,
-        pq_encode_with_cells,
-    )
-
     store_cols = list(store_cols)
-    reserved = {"codes", "cell", "vec", id_col, vec_col}
+    reserved = {*INDEX_FAMILY.reserved, id_col, vec_col}
     bad = [c for c in store_cols if c in reserved]
     if bad:
         raise ValueError(
             f"store_cols {bad} collide with the segment schema's "
             f"reserved columns ({sorted(reserved)})"
         )
-    from parq_tools_spark.operators._index_common import (
-        check_store_cols,
-    )
-
     check_store_cols(corpus, store_cols, "ann_index_build")
     spark = corpus.sparkSession
     vs = _ann_vs(spark, path)
@@ -356,7 +307,7 @@ def ann_index_build(
         vs.clean_stale(
             cur, keep_versions=_retention(json.loads(vs.read_marker(cur)))
         )
-        _ann_sweep_orphans(vs, path)
+        _BI.sweep_orphans(INDEX_FAMILY, vs, path)
     new = (cur or 0) + 1
 
     train = train_corpus if train_corpus is not None else corpus
@@ -366,46 +317,33 @@ def ann_index_build(
         train, m=m, n_codes=n_codes, id_col=id_col, vec_col=vec_col,
         rotation=rot,
     )
-    # ONE fused encode+assign pass over the embedding column (codes
-    # and cell share the batch, so no id-join glues them back)
-    coded = pq_encode_with_cells(
-        corpus,
-        centroids,
-        codebooks,
-        id_col=id_col,
-        vec_col=vec_col,
-        round_to=round_to,
-        rotation=rot,
-        keep_vec=store_vectors,
-        meta_cols=store_cols,
+    params = {
+        "n_cells": n_cells,
+        "m": m,
+        "n_codes": int(np.asarray(codebooks).shape[1]),
+        # realized width above serves ADC sizing; the CONFIGURED value
+        # (None = identity codebook) is what retrain must default to,
+        # else an every-row-a-codeword index silently retrains into a
+        # lossy fixed-width codebook
+        "n_codes_configured": n_codes,
+        "id_col": id_col,
+        "vec_col": vec_col,
+        "round_to": round_to,
+        "opq": opq,
+        "keep_versions": keep_versions,
+        "store_vectors": store_vectors,
+        # "auto" measures each batch's own cell skew (one extra
+        # aggregation pass) instead of guessing a salt factor; stored
+        # verbatim so every later ingest re-measures ITS batch
+        "cell_task_splits": cell_task_splits,
+        "store_cols": store_cols,
+    }
+    # n_vecs rides the segment write as an Observation (the encoder is
+    # row-1:1, so count(coded) == count(corpus)) — no count pass
+    seg, counter = _BI.write_segment(
+        INDEX_FAMILY, vs, corpus, path, {}, params, vec_col, new,
+        model=(centroids, codebooks, rot),
     )
-    # n_vecs rides the segment write as an Observation (the encoder
-    # is row-1:1, so count(coded) == count(corpus)) — the former
-    # separate corpus.count() pass is gone (r17 optimization)
-    from pyspark.sql import Observation
-
-    _obs = Observation()
-    coded = coded.observe(_obs, F.count(F.lit(1)).alias("n"))
-
-    from parq_tools_spark.operators._index_common import (
-        resolve_task_splits,
-    )
-
-    # "auto" measures the batch's own cell skew (one extra
-    # aggregation pass) instead of guessing a salt factor; stored in
-    # the manifest verbatim so every subsequent ingest re-measures
-    # ITS batch
-    from parq_tools_spark.operators._index_common import cached_for_auto
-
-    seg = _tag(new, "seg")
-    with cached_for_auto(coded, cell_task_splits) as coded_c:
-        splits = resolve_task_splits(
-            cell_task_splits, coded_c, "cell", "cell_task_splits"
-        )
-        _write_codes_segment(
-            coded_c, f"{path}/{seg}", id_col, splits
-        )
-    n_vecs = int(_obs.get["n"])
     model = _tag(new, "model") + ".json"
     _write_model(vs.fs, path, model, centroids, codebooks, rot)
     vs.commit(
@@ -413,104 +351,11 @@ def ann_index_build(
         json.dumps(
             {
                 "version": new,
-                "params": {
-                    "n_cells": n_cells,
-                    "m": m,
-                    "n_codes": int(np.asarray(codebooks).shape[1]),
-                    # realized width above serves ADC sizing; the
-                    # CONFIGURED value (None = identity codebook)
-                    # is what retrain must default to, else an
-                    # every-row-a-codeword index silently retrains
-                    # into a lossy fixed-width codebook
-                    "n_codes_configured": n_codes,
-                    "id_col": id_col,
-                    "vec_col": vec_col,
-                    "round_to": round_to,
-                    "opq": opq,
-                    "keep_versions": keep_versions,
-                    "store_vectors": store_vectors,
-                    "cell_task_splits": cell_task_splits,
-                    "store_cols": store_cols,
-                },
+                "params": params,
                 "id_type": _id_field_json(corpus, id_col),
-                "n_vecs": n_vecs,
+                **counter,
                 "model": model,
                 "segments": [seg],
-            }
-        ),
-    )
-
-
-def ann_index_add(new_vecs: DataFrame, path: str) -> None:
-    """Encode a new batch under the index's FROZEN model (centroids,
-    codebooks and rotation are read back, never re-derived — the
-    standard IVF-PQ ingest, so old and new codes live on one
-    quantization grid and score identically) and commit it as one new
-    immutable segment. Ids must be new to the index (the id-unique
-    contract every index here shares); a concurrent committer fails
-    loudly on the exclusive marker."""
-    import json
-
-    from parq_tools_spark.operators.similarity import (
-        pq_encode_with_cells,
-    )
-
-    spark = new_vecs.sparkSession
-    vs, cur, m = _ann_manifest(spark, path)
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _ann_sweep_orphans(vs, path)
-    p = m["params"]
-    centroids, codebooks, rot = _read_model(vs.fs, path, m)
-
-    # one fused encode+assign pass under the frozen model; the
-    # segment schema is an index-wide invariant, so the batch stores
-    # (or doesn't store) exact vectors exactly as the build did
-    from parq_tools_spark.operators._index_common import (
-        check_store_cols,
-    )
-
-    check_store_cols(new_vecs, p.get("store_cols", []), "ann_index_add")
-    coded = pq_encode_with_cells(
-        new_vecs,
-        centroids,
-        codebooks,
-        id_col=p["id_col"],
-        vec_col=p["vec_col"],
-        round_to=p["round_to"],
-        rotation=rot,
-        keep_vec=bool(p.get("store_vectors")),
-        meta_cols=p.get("store_cols", []),
-    )
-    # n_new rides the segment write as an Observation (the encoder
-    # is row-1:1) — no separate batch count pass
-    from pyspark.sql import Observation
-
-    _obs = Observation()
-    coded = coded.observe(_obs, F.count(F.lit(1)).alias("n"))
-
-    from parq_tools_spark.operators._index_common import (
-        cached_for_auto,
-        resolve_task_splits,
-    )
-
-    seg = _tag(cur + 1, "seg")
-    with cached_for_auto(coded, p.get("cell_task_splits", 1)) as coded_c:
-        _write_codes_segment(
-            coded_c, f"{path}/{seg}", p["id_col"],
-            resolve_task_splits(
-                p.get("cell_task_splits", 1), coded_c, "cell",
-                "cell_task_splits",
-            ),
-        )
-    n_new = int(_obs.get["n"])
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                **m,
-                "version": cur + 1,
-                "n_vecs": m["n_vecs"] + n_new,
-                "segments": m["segments"] + [seg],
             }
         ),
     )
@@ -574,8 +419,6 @@ def ann_index_retrain(
     :func:`ann_index_build` seed collects, ONE fused encode+assign
     pass, one cell-shuffled segment write. The source corpus is never
     touched."""
-    from functools import reduce
-
     vs, cur, man = _ann_manifest(spark, path)
     p = man["params"]
     if not p.get("store_vectors"):
@@ -585,10 +428,9 @@ def ann_index_retrain(
             "rebuild from the source corpus with ann_index_build"
         )
     id_col, vec_col = p["id_col"], p["vec_col"]
-    fs = vs.fs
-    live, missing = [], []
-    for s in man["segments"]:
-        (live if fs.list_files(f"{path}/{s}") else missing).append(s)
+    missing = [
+        s for s in man["segments"] if not vs.fs.list_files(f"{path}/{s}")
+    ]
     if missing:
         # a committed manifest's segments must exist: retrain REWRITES
         # the index from what it can read, so silently skipping a
@@ -605,15 +447,11 @@ def ann_index_retrain(
             "legitimately committed empty, compact first to fold it "
             "out of the manifest."
         )
-    batches = _ann_delete_batches(spark, path, man, id_col)
-    segs = [
-        _ann_visible_scan(spark, path, s, batches, id_col).select(
-            F.col(id_col), F.col("vec").alias(vec_col),
-            *p.get("store_cols", []),
-        )
-        for s in live
-    ]
-    corpus = reduce(DataFrame.unionByName, segs) if segs else None
+    rows = _BI.visible_rows(spark, path, man, id_col)
+    corpus = None if rows is None else rows.select(
+        F.col(id_col), F.col("vec").alias(vec_col),
+        *p.get("store_cols", []),
+    )
     if corpus is None or not corpus.take(1):
         raise ValueError(
             f"ann index at {path} has no visible vectors to retrain "
@@ -649,87 +487,22 @@ def ann_index_retrain(
     )
 
 
-def ann_index_delete(spark, path: str, ids, _verified: bool = False) -> dict:
-    """Delete vectors from the index by id — VERSION-SCOPED
-    tombstones, the same LSM semantics as ``bm25_index_delete``: the
-    ids land in an immutable ``del-`` directory recorded with the
-    version it was committed at; serving anti-joins each segment
-    against only the tombstones covering its version, so a later
-    :func:`ann_index_add` of the same id is immediately visible (no
-    compaction needed — upserts stay O(batch)). The next
-    :func:`ann_index_compact` folds pending tombstones into the code
-    rows and clears the list. ``n_vecs`` decrements by the requested
-    count; every id MUST be a currently-visible vector (every indexed
-    vector has exactly one code row, so missing ids always raise —
-    there is no zero-token analogue here).
+# ------------------------------------------------------------ lifecycle
+# The shared segment-index ops (``operators/_band_index.py``) bound to
+# INDEX_FAMILY; the wrappers keep ANN's own parameter names.
+ann_index_delete = _BI.alias(INDEX_FAMILY, "delete")
+ann_index_stats = _BI.alias(INDEX_FAMILY, "stats")
 
-    Returns ``{"deleted": n, "version": v}``."""
-    import json
-    from functools import reduce
 
-    from pyspark.sql import types as T
-
-    vs, cur, m = _ann_manifest(spark, path)
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _ann_sweep_orphans(vs, path)
-    id_col = m["params"]["id_col"]
-
-    if isinstance(ids, DataFrame):
-        ids_df = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
-    else:
-        ids_df = spark.createDataFrame(
-            [(i,) for i in ids],
-            T.StructType([_id_field(m)]),
-        ).distinct()
-    from parq_tools_spark.operators._index_common import eager_stats
-
-    ids_df, _st = eager_stats(ids_df, n=F.count(F.lit(1)))
-    n_del = int(_st["n"])
-    if n_del == 0:
-        return {"deleted": 0, "version": cur}
-
-    if not _verified:
-        # _verified=True is the upsert fast path: the caller just
-        # derived ``ids`` FROM the visible rows, so re-scanning to
-        # prove visibility would read the code rows twice per batch
-        fs = vs.fs
-        live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-        batches = _ann_delete_batches(spark, path, m, id_col)
-        n_found = 0
-        if live:
-            visible_ids = reduce(
-                DataFrame.unionByName,
-                [
-                    _ann_visible_scan(
-                        spark, path, s, batches, id_col
-                    ).select(id_col)
-                    for s in live
-                ],
-            ).join(F.broadcast(ids_df), on=id_col)
-            n_found = visible_ids.distinct().count()
-        if n_found < n_del:
-            raise ValueError(
-                f"ann_index_delete: {n_del - n_found} of {n_del} "
-                "requested id(s) are not visible in the index (typo, "
-                "never indexed, or already deleted) — deleting them "
-                "would corrupt n_vecs"
-            )
-
-    del_dir = _tag(cur + 1, "del")
-    ids_df.write.mode("errorifexists").parquet(f"{path}/{del_dir}")
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                **m,
-                "version": cur + 1,
-                "n_vecs": m["n_vecs"] - n_del,
-                "deletes": m.get("deletes", [])
-                + [{"dir": del_dir, "upto": cur}],
-            }
-        ),
-    )
-    return {"deleted": n_del, "version": cur + 1}
+def ann_index_add(new_vecs: DataFrame, path: str) -> None:
+    """Encode a new batch under the index's FROZEN model (centroids,
+    codebooks and rotation are read back, never re-derived — the
+    standard IVF-PQ ingest, so old and new codes live on one
+    quantization grid and score identically) and commit it as one new
+    immutable segment, ``n_vecs`` raised by the batch size. Ids must be
+    new to the index (the id-unique contract every index here shares);
+    a concurrent committer fails loudly on the exclusive marker."""
+    _BI.add(INDEX_FAMILY, new_vecs, path)
 
 
 def ann_index_upsert(
@@ -739,52 +512,11 @@ def ann_index_upsert(
     tombstoned (one :func:`ann_index_delete` commit), then the whole
     batch encodes under the frozen model and appends
     (:func:`ann_index_add`) — O(batch + tombstone scan), never an
-    index rewrite. ``_visible_ids`` is the apply_cdc fast path: a
-    pre-materialized superset of the batch's visible ids, so the CDC
-    path never scans the index twice per batch. Returns
-    ``{"updated": u, "inserted": i, "version": v}``."""
-    spark = new_vecs.sparkSession
-    vs, cur, m = _ann_manifest(spark, path)
-    id_col = m["params"]["id_col"]
-    # batch size + id-uniqueness in ONE aggregate job (was two)
-    row = new_vecs.agg(
-        F.count(F.lit(1)), F.countDistinct(F.col(id_col))
-    ).first()
-    n_rows, n_batch = int(row[0]), int(row[1])
-    ids_df = new_vecs.select(F.col(id_col)).distinct()
-    if n_batch < n_rows:
-        raise ValueError(
-            f"ann_index_upsert: batch carries {n_rows - n_batch} "
-            f"duplicate {id_col} row(s) — one vector per id (a "
-            "duplicate would append twice and corrupt n_vecs)"
-        )
-
-    fs = vs.fs
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-    updated = 0
-    if _visible_ids is not None or live:
-        if _visible_ids is not None:
-            visible = _visible_ids
-        else:
-            visible = _ann_visible_ids(spark, path, m, id_col)
-        from parq_tools_spark.operators._index_common import (
-            eager_stats,
-        )
-
-        existing, _est = eager_stats(
-            visible.join(F.broadcast(ids_df), on=id_col).distinct(),
-            n=F.count(F.lit(1)),
-        )
-        updated = int(_est["n"])
-        if updated:
-            # ids came FROM the visible rows — skip the re-scan
-            ann_index_delete(spark, path, existing, _verified=True)
-    ann_index_add(new_vecs, path)
-    return {
-        "updated": updated,
-        "inserted": n_batch - updated,
-        "version": _ann_vs(spark, path).current(),
-    }
+    index rewrite. One vector per id. ``_visible_ids`` is the
+    apply_cdc fast path: a pre-materialized superset of the batch's
+    visible ids, so the CDC path never scans the index twice per
+    batch. Returns ``{"updated": u, "inserted": i, "version": v}``."""
+    return _BI.upsert(INDEX_FAMILY, new_vecs, path, _visible_ids=_visible_ids)
 
 
 def ann_index_apply_cdc(
@@ -799,153 +531,27 @@ def ann_index_apply_cdc(
     the exact contract of :func:`~parq_tools_spark.operators.search.
     bm25_index_apply_cdc` so one change log can feed every index
     family identically: the LAST op per id wins, ordered by
-    ``(seq desc, op desc)`` (a same-sequence 'U' beats 'D', matching
-    ``operators/merge.py``'s ``apply_cdc``); a final 'D' for an id not
-    visible in the index is a NO-OP, never an error (the I-then-D
-    short-lived-row pattern); final 'I'/'U' rows upsert under the
+    ``(seq desc, op desc)``; a final 'D' for an id not visible in the
+    index is a NO-OP, never an error; final 'I'/'U' rows (id, the
+    index's ``vec_col`` and its ``store_cols``) upsert under the
     frozen model. O(batch + one visible-id scan), no compaction
     required.
 
     'M' (metadata-only) ops fold into
-    :func:`ann_index_update_metadata` AFTER the deletes and upserts
-    (shared :func:`~parq_tools_spark.operators._index_common.
-    resolve_cdc_with_meta` semantics): a re-grade rides the same
-    change stream without a re-encode upsert — O(affected) metadata
-    rewrite, no ``vec_col`` needed on the 'M' rows (which is also
-    what makes re-grades possible on ``store_vectors=False``
-    indexes). An 'M' row carries the id plus ALL ``store_cols``; an
-    'M' whose id is not visible once the batch applied is a no-op
-    (replay convergence), counted in ``meta_noops``; an 'M'
-    superseded by a same-batch 'U'/'D' at an equal-or-later seq
-    vanishes like a superseded 'U'.
+    :func:`ann_index_update_metadata` AFTER the deletes and upserts: a
+    re-grade rides the same change stream without a re-encode — no
+    ``vec_col`` needed on the 'M' rows, which is also what makes
+    re-grades possible on ``store_vectors=False`` indexes. An 'M' row
+    carries the id plus ALL ``store_cols``; an 'M' whose id is not
+    visible once the batch applied is a no-op counted in
+    ``meta_noops``.
 
     Returns ``{"deleted": d, "delete_noops": n, "updated": u,
     "inserted": i, "meta_updated": mu, "meta_noops": mn,
     "version": v}``."""
-    from functools import reduce
-
-    from parq_tools_spark.operators._index_common import (
-        eager_stats,
-        resolve_cdc_with_meta,
+    return _BI.apply_cdc(
+        INDEX_FAMILY, spark, path, changes, op_col=op_col, seq_col=seq_col
     )
-
-    _, _, m = _ann_manifest(spark, path)
-    p = m["params"]
-    id_col, vec_col = p["id_col"], p["vec_col"]
-
-    final, metas = resolve_cdc_with_meta(changes, id_col, op_col, seq_col)
-
-    deletes = final.filter(F.col(op_col) == "D").select(id_col).distinct()
-    # the value column is selected LAZILY: a delete-only change log
-    # (no vec_col in its schema) must apply cleanly, exactly like the
-    # BM25 contract — the column is only required if I/U rows exist
-    ups_rows = final.filter(F.col(op_col).isin("I", "U"))
-    # both branch sizes in ONE aggregate job over the (checkpointed)
-    # resolved batch — resolve_cdc leaves at most one row per id
-    sizes = final.agg(
-        F.count(F.when(F.col(op_col) == "D", 1)),
-        F.count(F.when(F.col(op_col).isin("I", "U"), 1)),
-    ).first()
-    has_ups = bool(int(sizes[1]))
-
-    # ONE visible-id scan serves both the delete no-op filter and the
-    # upsert's updated/inserted probe (their ids are disjoint after
-    # resolve_cdc, and the tombstone commit between them cannot change
-    # the upsert ids' visibility) — restricted to the batch's touched
-    # ids before materializing, so the checkpoint is O(batch)
-    n_d = int(sizes[0])
-    visible_touched = None
-    if n_d or has_ups:
-        touched = deletes
-        if has_ups:
-            touched = touched.unionByName(
-                ups_rows.select(id_col)
-            ).distinct()
-        fs = _ann_vs(spark, path).fs
-        live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-        if live:
-            batches = _ann_delete_batches(spark, path, m, id_col)
-            visible_touched = (
-                reduce(
-                    DataFrame.unionByName,
-                    [
-                        _ann_visible_scan(spark, path, s, batches, id_col)
-                        .select(id_col)
-                        for s in live
-                    ],
-                )
-                .join(F.broadcast(touched), on=id_col)
-                .distinct()
-            )
-            visible_touched = _mat(visible_touched)
-
-    n_deleted, n_noop = 0, 0
-    if n_d:
-        n_vis = 0
-        if visible_touched is not None:
-            visible_d, _vst = eager_stats(
-                visible_touched.join(F.broadcast(deletes), on=id_col),
-                n=F.count(F.lit(1)),
-            )
-            n_vis = int(_vst["n"])
-            if n_vis:
-                # ids came FROM the visible rows — the delete's
-                # visibility re-scan is redundant
-                n_deleted = ann_index_delete(
-                    spark, path, visible_d, _verified=True
-                )["deleted"]
-        n_noop = n_d - n_vis
-    out = {
-        "deleted": n_deleted,
-        "delete_noops": n_noop,
-        "updated": 0,
-        "inserted": 0,
-    }
-    if has_ups:
-        from parq_tools_spark.operators._index_common import (
-            check_store_cols,
-        )
-
-        # validate here for the clear message — the bare select would
-        # throw UNRESOLVED_COLUMN before add's own check runs
-        check_store_cols(
-            ups_rows, p.get("store_cols", []), "ann_index_apply_cdc"
-        )
-        res = ann_index_upsert(
-            ups_rows.select(
-                id_col, vec_col, *p.get("store_cols", [])
-            ),
-            path,
-            _visible_ids=visible_touched,
-        )
-        out.update(
-            {"updated": res["updated"], "inserted": res["inserted"]}
-        )
-    out.update({"meta_updated": 0, "meta_noops": 0})
-    if metas is not None:
-        from parq_tools_spark.operators._index_common import (
-            apply_cdc_meta,
-        )
-
-        # visibility resolves POST-upsert (fresh manifest): an 'M'
-        # for an id this very batch inserted must apply
-        _, _, m2 = _ann_manifest(spark, path)
-        vis = _ann_visible_ids(spark, path, m2, id_col)
-        out.update(
-            apply_cdc_meta(
-                metas,
-                store=p.get("store_cols", []),
-                src_id_col=id_col,
-                dst_id_col=id_col,
-                visible_ids=vis,
-                update_fn=lambda upd: ann_index_update_metadata(
-                    spark, path, upd
-                ),
-                fn="ann_index_apply_cdc",
-            )
-        )
-    out["version"] = _ann_vs(spark, path).current()
-    return out
 
 
 def ann_index_update_metadata(
@@ -956,351 +562,69 @@ def ann_index_update_metadata(
     max_tombstone_frac: float = 0.0,
 ) -> dict:
     """Metadata-ONLY update for ``store_cols`` indexes: flip stored
-    metadata values (a license re-grade, a recomputed quality score)
-    WITHOUT re-encoding anything — the affected rows' existing codes
-    (and stored vectors) are read back from the visible segments,
-    their metadata columns replaced, and the rewritten rows committed
-    as one new segment together with a version-scoped tombstone
-    hiding the old rows. A full :func:`ann_index_upsert` would
-    re-run the encode ``mapInPandas`` per row; at corpus scale that
-    makes ``where=`` unmaintainable, and it also needs the raw
-    vectors, which a ``store_vectors=False`` index no longer has.
+    metadata values WITHOUT re-encoding anything — the affected rows'
+    existing codes (and stored vectors) are read back, their metadata
+    columns replaced, and the rewritten rows committed as one new
+    segment together with a version-scoped tombstone hiding the old
+    rows. A full :func:`ann_index_upsert` would re-run the encode per
+    row and needs the raw vectors, which a ``store_vectors=False``
+    index no longer has. The model, cell assignments, ``n_vecs`` and
+    the probe lists are untouched (the vector didn't change), so
+    serving plans — including pushed ``where=`` filters — keep their
+    shape.
 
-    ``updates`` carries the index id column plus ANY SUBSET of the
-    index's ``store_cols`` (untouched metadata columns keep their
-    stored values); exactly one row per id. Every id must be
-    currently visible — a typo'd id raises rather than silently
-    updating nothing. The quantization model, cell assignments,
-    ``n_vecs`` and the probe lists are untouched (cells don't move:
-    the vector didn't change), so serving plans — including the
-    pushed ``where=`` filters — are byte-identical in shape.
-
-    The commit is ATOMIC (segment dir + tombstone dir written first,
-    one manifest commit last): a crash leaves invisible orphans and
-    the old metadata fully served; there is no intermediate state
-    where the vectors are deleted. Tombstone ``upto=cur`` hides the
-    old rows in every existing segment while the new segment (version
-    cur+1) stays out of reach — the same visibility trick upserts
-    use. Returns ``{"updated": n, "version": v}``.
-
-    Cost shape at 100 TB: one id-join over the code rows (Catalyst/
-    AQE pick broadcast for request-sized updates, shuffled join for
-    corpus-sized re-grades — the update set is never collected) plus
-    a write of O(affected) rows; codes and vectors move bytes, never
-    through Python.
-
-    ``max_segments`` / ``max_tombstone_frac`` arm the shared
-    stats-driven compaction trigger AFTER the commit (the sinks'
-    :func:`ann_index_maybe_compact`, same bounds): every update adds
-    one segment + one tombstone, so a metadata-churn-only maintenance
-    loop (repeated re-grades with no ingest in between) would
-    otherwise fragment the manifest unboundedly — ingest paths
-    consult the trigger, and as of this round so does this one. Both
-    default OFF (0), preserving the commit-and-return behavior."""
-    import json
-    from functools import reduce
-
-    vs, cur, m = _ann_manifest(spark, path)
-    p = m["params"]
-    id_col = p["id_col"]
-    store = p.get("store_cols", [])
-    from parq_tools_spark.operators._index_common import (
-        check_metadata_updates,
-        check_self_exclusion_types,
-    )
-
-    upd_cols = check_metadata_updates(
-        updates, id_col, store, "ann_index_update_metadata"
-    )
-
-    check_self_exclusion_types(
-        updates.schema[id_col].dataType,
-        _id_field(m).dataType,
-        "ann_index_update_metadata: updates",
-        remedy="Cast the update id column to the indexed id type.",
-    )
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _ann_sweep_orphans(vs, path)
-
-    from parq_tools_spark.operators._index_common import eager_stats
-
-    upd, _st = eager_stats(
-        updates.select(
-            id_col, *[F.col(c).alias(f"_upd_{c}") for c in upd_cols]
-        ),
-        n=F.count(F.lit(1)),
-    )
-    n_upd = int(_st["n"])
-    if n_upd == 0:
-        return {"updated": 0, "version": cur}
-    if upd.select(id_col).distinct().count() < n_upd:
-        raise ValueError(
-            f"ann_index_update_metadata: duplicate {id_col} row(s) in "
-            "updates — one metadata row per id"
-        )
-
-    fs = vs.fs
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-    batches = _ann_delete_batches(spark, path, m, id_col)
-    rows = (
-        reduce(
-            DataFrame.unionByName,
-            [
-                _ann_visible_scan(spark, path, s, batches, id_col)
-                for s in live
-            ],
-        )
-        if live
-        else None
-    )
-    affected = rows.join(upd, on=id_col) if rows is not None else None
-    if affected is None:
-        raise ValueError(
-            f"ann_index_update_metadata: none of the {n_upd} id(s) "
-            "are visible in the (empty) index"
-        )
-    # updated values are CAST to the stored column types: a wider
-    # update type (int column, long updates) would otherwise commit a
-    # segment whose metadata schema drifts from its siblings'
-    out_cols = [
-        F.col(f"_upd_{c}").cast(rows.schema[c].dataType).alias(c)
-        if c in upd_cols
-        else F.col(c)
-        for c in rows.columns
-    ]
-    new_rows = affected.select(*out_cols)
-
-    from parq_tools_spark.operators._index_common import (
-        cached_for_auto,
-        resolve_task_splits,
-    )
-
-    seg = _tag(cur + 1, "seg")
-    with cached_for_auto(
-        new_rows, p.get("cell_task_splits", 1)
-    ) as new_c:
-        _write_codes_segment(
-            new_c, f"{path}/{seg}", id_col,
-            resolve_task_splits(
-                p.get("cell_task_splits", 1), new_c, "cell",
-                "cell_task_splits",
-            ),
-        )
-    # visibility check from the WRITTEN segment (reads O(affected)
-    # rows back, not the index again); a failure here leaves only an
-    # invisible orphan the next maintenance pass sweeps. A no-match
-    # join writes a fileless directory (just _SUCCESS) that cannot be
-    # schema-inferred, so the listing gates the read.
-    n_found = (
-        _read_committed(spark, f"{path}/{seg}")
-        .select(id_col)
-        .distinct()
-        .count()
-        if fs.list_files(f"{path}/{seg}")
-        else 0
-    )
-    if n_found < n_upd:
-        raise ValueError(
-            f"ann_index_update_metadata: {n_upd - n_found} of {n_upd} "
-            "requested id(s) are not visible in the index (typo, "
-            "never indexed, or deleted) — refusing a partial update"
-        )
-    del_dir = _tag(cur + 1, "del")
-    upd.select(id_col).write.mode("errorifexists").parquet(
-        f"{path}/{del_dir}"
-    )
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                **m,
-                "version": cur + 1,
-                "segments": m["segments"] + [seg],
-                # n_vecs unchanged: the same vectors, new metadata
-                "deletes": m.get("deletes", [])
-                + [{"dir": del_dir, "upto": cur}],
-            }
-        ),
-    )
-    if max_segments or max_tombstone_frac:
+    ``updates`` carries the id column plus ANY SUBSET of the index's
+    ``store_cols``; exactly one row per id, every id visible. Cost at
+    100 TB: one id-join over the code rows plus a write of O(affected)
+    rows; codes and vectors move bytes, never through Python.
+    ``max_segments`` / ``max_tombstone_frac`` arm
+    :func:`ann_index_maybe_compact` AFTER the commit, so a
+    metadata-churn-only loop cannot fragment the manifest unboundedly;
+    both default OFF (0). Returns ``{"updated": n, "version": v}``."""
+    out = _BI.update_metadata(INDEX_FAMILY, spark, path, updates)
+    if out["updated"] and (max_segments or max_tombstone_frac):
         ann_index_maybe_compact(
             spark,
             path,
             max_segments=max_segments,
             max_tombstone_frac=max_tombstone_frac,
         )
-    return {"updated": n_upd, "version": cur + 1}
-
-
-def _ann_visible_rows_for_rewrite(spark, path, vs, m, id_col, fn):
-    """Every VISIBLE code row, tombstones folded — the read side both
-    evolution legs (backfill / prune) share. Raises when nothing is
-    visible: committing a rewrite of zero rows would make a data-less
-    directory the SOLE segment and break schema inference for every
-    later query."""
-    from functools import reduce
-
-    fs = vs.fs
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
-    if not live:
-        raise ValueError(
-            f"{fn}: the index holds no visible rows — nothing to "
-            "rewrite"
-        )
-    batches = _ann_delete_batches(spark, path, m, id_col)
-    rows = reduce(
-        DataFrame.unionByName,
-        [_ann_visible_scan(spark, path, s, batches, id_col) for s in live],
-    )
-    if not rows.take(1):
-        raise ValueError(
-            f"{fn}: the index holds no visible rows — nothing to "
-            "rewrite"
-        )
-    return rows
-
-
-def _ann_commit_rewrite(out, path, *, vs, cur, m, p, id_col, store_cols):
-    """Write rewritten code rows as ONE fresh segment and commit a
-    COMPACTION-shaped manifest (``segments=[new]``, ``deletes=[]``)
-    whose ``params.store_cols`` becomes ``store_cols`` in the SAME
-    atomic commit — the shared tail of the ANN evolution legs
-    (backfill extends the list, prune shrinks it). The model,
-    ``n_vecs`` and cell assignments are untouched (the vectors didn't
-    change). Returns the new version."""
-    import json
-
-    from parq_tools_spark.operators._index_common import (
-        cached_for_auto,
-        resolve_task_splits,
-    )
-
-    seg = _tag(cur + 1, "seg")
-    with cached_for_auto(out, p.get("cell_task_splits", 1)) as out_c:
-        _write_codes_segment(
-            out_c, f"{path}/{seg}", id_col,
-            resolve_task_splits(
-                p.get("cell_task_splits", 1), out_c, "cell",
-                "cell_task_splits",
-            ),
-        )
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {
-                **m,
-                "version": cur + 1,
-                "segments": [seg],
-                "deletes": [],
-                # n_vecs/model unchanged: same vectors, different
-                # metadata columns on every row
-                "params": {**p, "store_cols": store_cols},
-            }
-        ),
-    )
-    return cur + 1
+    return out
 
 
 def ann_index_add_metadata_col(
     spark, path: str, values: DataFrame, default=_NO_DEFAULT
 ) -> dict:
-    """Backfill NEW metadata column(s) over the index — the evolution
-    leg of the ``store_cols`` lifecycle (store → ``where=``
-    filter → ``update_metadata`` → **evolve** → prune): a quality
+    """Backfill NEW metadata column(s) over the index — a quality
     score computed AFTER the build becomes a served, filterable
-    column without re-encoding a single vector. Every visible code
-    row is read back, the new column(s) attached (``values`` looked
-    up by the index id; ids absent from ``values`` take ``default`` —
-    omit it and an uncovered id raises before anything is written;
-    extra ids in ``values`` are ignored), and the rewritten rows
-    committed as ONE fresh segment whose manifest extends
-    ``params.store_cols`` in the SAME atomic commit — serving-time
-    ``where=`` validation and every subsequent ingest's
-    ``check_store_cols`` see the new columns the instant they are
-    queryable, never before. ``values`` may carry k new columns —
-    they land in ONE O(index) rewrite (``default`` a shared fill or a
-    per-column dict), because the rewrite is the entire cost of
-    evolution and must never be paid per column. Works on a
-    store_cols-LESS index (adding the first metadata column) and on
-    ``store_vectors=False`` indexes — the codes are carried as
-    stored bytes, which is the proof nothing re-encodes.
-
-    The commit is COMPACTION-shaped (``segments=[new]``,
-    ``deletes=[]``): a backfill touches every row by definition, and
-    the update path's whole-index tombstone would bolt a full-index
-    anti-join onto every query until the next fold. Pending
-    tombstones fold into the rewrite; the model, ``n_vecs`` and cell
-    assignments are untouched (the vectors didn't change). Cost at
-    100 TB: one id-lookup join (AQE picks broadcast for small values,
-    shuffle for corpus-sized scores) plus the cell-keyed segment
-    write every ingest already pays — O(index) once, the irreducible
-    price of schema evolution. Returns ``{"added": [cols],
-    "version": v}``."""
-    from parq_tools_spark.operators._index_common import (
-        backfill_metadata_rows,
-        check_add_metadata_col,
+    column without re-encoding a single vector: every visible code
+    row is rewritten with the column(s) (``values`` looked up by the
+    index id; ids absent from it take ``default`` — omit it and an
+    uncovered id raises before anything is written) and committed as
+    ONE compaction-shaped segment whose manifest extends
+    ``params.store_cols`` atomically. ``values`` may carry k new
+    columns, landed in ONE O(index) rewrite. Works on a
+    store_cols-LESS index and on ``store_vectors=False`` indexes (the
+    codes are carried as stored bytes). Pending tombstones fold in;
+    the model, ``n_vecs`` and cell assignments are untouched; the
+    rewrite uses the index's ``cell_task_splits``. Returns
+    ``{"added": [cols], "version": v}``."""
+    return _BI.add_metadata_col(
+        INDEX_FAMILY, spark, path, values, default, task_splits=None
     )
-
-    vs, cur, m = _ann_manifest(spark, path)
-    p = m["params"]
-    id_col = p["id_col"]
-    store = list(p.get("store_cols", []))
-    reserved = {"codes", "cell", "vec", id_col, p["vec_col"]}
-    new_cols = check_add_metadata_col(
-        values, id_col, store, reserved, "ann_index_add_metadata_col",
-        default=default,
-    )
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _ann_sweep_orphans(vs, path)
-    rows = _ann_visible_rows_for_rewrite(
-        spark, path, vs, m, id_col, "ann_index_add_metadata_col"
-    )
-    out, _ = backfill_metadata_rows(
-        rows, values, id_col, new_cols, default,
-        "ann_index_add_metadata_col",
-    )
-    v = _ann_commit_rewrite(
-        out, path, vs=vs, cur=cur, m=m, p=p, id_col=id_col,
-        store_cols=store + new_cols,
-    )
-    return {"added": new_cols, "version": v}
 
 
 def ann_index_drop_metadata_col(spark, path: str, cols) -> dict:
-    """Drop stored metadata column(s) from the index — the PRUNE leg
-    of the metadata lifecycle, the inverse of
+    """Drop stored metadata column(s) from the index — the inverse of
     :func:`ann_index_add_metadata_col`: every visible code row is
-    rewritten WITHOUT the column(s) (codes carried as stored bytes,
-    nothing re-encoded) and committed as ONE compaction-shaped
-    segment whose manifest shrinks ``params.store_cols`` atomically.
-    Until this runs, a mistakenly added or superseded column pays its
-    bytes on every cell scan forever. ``cols`` is one name or a
-    list; dropping the last stored column reverts the index to
-    store_cols-less — serving ``where=`` against a dropped column
-    then fails with the standard unknown-column error. Returns
+    rewritten WITHOUT the column(s) (nothing re-encoded) in ONE
+    compaction-shaped commit that shrinks ``params.store_cols``
+    atomically. ``cols`` is one name or a list; dropping the last
+    stored column reverts the index to store_cols-less. Returns
     ``{"dropped": [cols], "version": v}``."""
-    from parq_tools_spark.operators._index_common import (
-        check_drop_metadata_cols,
+    return _BI.drop_metadata_col(
+        INDEX_FAMILY, spark, path, cols, task_splits=None
     )
-
-    vs, cur, m = _ann_manifest(spark, path)
-    p = m["params"]
-    id_col = p["id_col"]
-    store = list(p.get("store_cols", []))
-    cols = check_drop_metadata_cols(
-        cols, store, "ann_index_drop_metadata_col"
-    )
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _ann_sweep_orphans(vs, path)
-    rows = _ann_visible_rows_for_rewrite(
-        spark, path, vs, m, id_col, "ann_index_drop_metadata_col"
-    )
-    v = _ann_commit_rewrite(
-        rows.drop(*cols), path, vs=vs, cur=cur, m=m, p=p,
-        id_col=id_col,
-        store_cols=[c for c in store if c not in cols],
-    )
-    return {"dropped": cols, "version": v}
 
 
 def ann_index_compact(
@@ -1313,109 +637,14 @@ def ann_index_compact(
     """Rewrite the manifest's segments into one (per-cell read +
     coalesce, no shuffle — the cell is the directory) when any cell's
     file count exceeds both ``min_files_per_cell`` and its
-    byte-target, then commit. Crash-safe with no repair path: readers
-    only ever see committed manifests. ``force=True`` rewrites
-    regardless of the file-count triggers (the stats-driven
-    ``maybe_compact`` path: a breached SEGMENT bound must fold even
-    when every per-cell file already sits at its byte target — output
-    files still coalesce to the byte targets). Returns ``{cell:
+    byte-target, when tombstones are pending (they fold into the code
+    rows), or when ``force``; then commit. Crash-safe with no repair
+    path: readers only ever see committed manifests. Returns ``{cell:
     (files_before, files_after)}`` for cells whose count dropped."""
-    import json
-    import math
-
-    vs, cur, m = _ann_manifest(spark, path)
-    vs.clean_stale(cur, keep_versions=_retention(m))
-    _ann_sweep_orphans(vs, path)
-    fs = vs.fs
-
-    per_cell: dict = {}
-    for seg in m["segments"]:
-        for entry, is_dir, _ in fs.list_status(f"{path}/{seg}"):
-            if not (is_dir and entry.startswith("cell=")):
-                continue
-            c = int(entry.split("=", 1)[1])
-            files = [
-                size
-                for n_, d, size in fs.list_status(f"{path}/{seg}/{entry}")
-                if not d and n_.endswith(".parquet")
-            ]
-            cnt, tot = per_cell.get(c, (0, 0))
-            per_cell[c] = (cnt + len(files), tot + sum(files))
-    targets = {
-        c: max(1, math.ceil(tot / target_file_bytes))
-        for c, (cnt, tot) in per_cell.items()
-    }
-    # pending tombstones force a rewrite regardless of file counts —
-    # folding them into the code rows (and clearing the list) bounds
-    # the serving-time anti-join side
-    id_col = m["params"]["id_col"]
-    batches = _ann_delete_batches(spark, path, m, id_col)
-    if not force and not batches and not any(
-        cnt > min_files_per_cell and cnt > targets[c]
-        for c, (cnt, tot) in per_cell.items()
-    ):
-        return {}
-
-    from functools import reduce
-
-    new_seg = _tag(cur + 1, "seg")
-
-    def _rewrite_cell(c) -> None:
-        if not batches:
-            # no pending tombstones: one multi-path read of the cell
-            # subdirectories (per-segment plans exist only to scope
-            # anti-joins)
-            srcs = [
-                f"{path}/{seg}/cell={c}"
-                for seg in m["segments"]
-                if fs.exists(f"{path}/{seg}/cell={c}")
-            ]
-            if not srcs:
-                return
-            cell_df = _read_committed(spark, *srcs)
-        else:
-            # per-segment reads so each segment folds only the
-            # tombstones whose upto covers its version; the cell
-            # filter is partition pruning, so the rewrite stays
-            # map-only per cell
-            parts = [
-                _ann_visible_scan(spark, path, seg, batches, id_col).filter(
-                    F.col("cell") == c
-                )
-                for seg in m["segments"]
-                if fs.exists(f"{path}/{seg}/cell={c}")
-            ]
-            if not parts:
-                return
-            cell_df = reduce(DataFrame.unionByName, parts).drop("cell")
-        (
-            cell_df.coalesce(targets[c])
-            .write.mode("errorifexists")
-            .parquet(f"{path}/{new_seg}/cell={c}")
-        )
-
-    # independent per-cell rewrites overlap from a small thread pool
-    # (guide §2.6); failures propagate BEFORE the commit
-    from parq_tools_spark.operators._index_common import run_overlapped
-
-    run_overlapped(_rewrite_cell, sorted(per_cell))
-    vs.commit(
-        cur + 1,
-        json.dumps(
-            {**m, "version": cur + 1, "segments": [new_seg], "deletes": []}
-        ),
+    return _BI.compact(
+        INDEX_FAMILY, spark, path, target_file_bytes,
+        min_files_per_cell, force,
     )
-
-    compacted = {}
-    for c, (cnt, tot) in per_cell.items():
-        n_after = sum(
-            1
-            for n_, d, _ in fs.list_status(f"{path}/{new_seg}/cell={c}")
-            if not d and n_.endswith(".parquet")
-        )
-        if n_after < cnt:
-            compacted[c] = (cnt, n_after)
-    return compacted
 
 
 def ann_index_maybe_compact(
@@ -1424,46 +653,17 @@ def ann_index_maybe_compact(
     max_segments: int = 16,
     max_tombstone_frac: float = 0.2,
 ) -> bool:
-    """Stats-driven :func:`ann_index_compact` (the shared
-    :func:`~parq_tools_spark.operators._index_common.maybe_compact`
-    trigger): fold segments/tombstones only when the live manifest
-    references more than ``max_segments`` segments or pending
-    tombstoned ids exceed ``max_tombstone_frac`` of ``n_vecs`` —
-    otherwise O(manifest) and do nothing. The streaming sinks consult
-    this each batch when armed, replacing blind every-N-batches
-    compaction with compact-exactly-when-fragmented. When triggered,
-    compaction runs with ``force=True`` so the breach
-    actually folds the segment list instead of re-triggering every
-    batch. Returns True iff a compaction ran."""
-    from parq_tools_spark.operators._index_common import maybe_compact
-
-    return maybe_compact(
-        spark,
-        path,
-        INDEX_MARKERS["ann"],
-        lambda: ann_index_compact(spark, path, force=True),
+    """Stats-driven :func:`ann_index_compact`: fold segments and
+    tombstones only when the live manifest references more than
+    ``max_segments`` segments or pending tombstoned ids exceed
+    ``max_tombstone_frac`` of ``n_vecs`` — otherwise O(manifest) and do
+    nothing. The streaming sinks consult this each batch when armed.
+    Returns True iff a compaction ran."""
+    return _BI.compact_when(
+        INDEX_FAMILY, spark, path,
         max_segments=max_segments,
         max_tombstone_frac=max_tombstone_frac,
-        rows_key="n_vecs",
     )
-
-
-def ann_index_stats(
-    spark, path: str, version: Optional[int] = None
-) -> dict:
-    """The resolved manifest's statistics — ``version``, ``n_vecs``,
-    ``params`` — the staleness contract's inspection point (compare
-    ``version`` against a query result's ``index_version``).
-    ``version=`` inspects a retained historical version (see
-    :func:`ann_index_build`'s ``keep_versions``)."""
-    _, cur, m = _ann_manifest(spark, path, version)
-    return {
-        "version": cur,
-        "n_vecs": m["n_vecs"],
-        "params": m["params"],
-        "n_segments": len(m["segments"]),
-        "pending_delete_batches": len(m.get("deletes", [])),
-    }
 
 
 def _probe_lists(q_mat, centroids, nprobe: int, round_to: int):
@@ -1569,31 +769,11 @@ def ann_index_topk(
     build_filter_expression`) and pushed by Catalyst into the
     cell-pruned segment scans: no metadata table is joined, no id set
     is materialized. Composes with ``allowed_ids`` (both apply)."""
-    from functools import reduce
-
-    from parq_tools_spark.operators.similarity import adc_score
-
     vs, cur, m = _ann_manifest(spark, path, version)
     p = m["params"]
     id_col = p["id_col"]
     query_vec_col = query_vec_col or p["vec_col"]
-    # validate (and compile) the where predicate UP FRONT, so a bad
-    # predicate or a store_cols-less index fails identically whether
-    # the index is empty or not
-    where_col = None
-    if where is not None:
-        from parq_tools_spark.plans.query_parser import (
-            build_filter_expression,
-        )
-
-        stored = p.get("store_cols", [])
-        if not stored:
-            raise ValueError(
-                f"ann index at {path} stores no metadata columns; "
-                "where= needs an index built with "
-                "ann_index_build(..., store_cols=[...])"
-            )
-        where_col = build_filter_expression(where, columns=stored)
+    where_col = _BI.compile_where(INDEX_FAMILY, path, p, where)
     centroids, codebooks, rot = _read_model(vs.fs, path, m)
     m_, n_codes_, sub = codebooks.shape
 
@@ -1608,8 +788,14 @@ def ann_index_topk(
                 "ann_index_build(..., store_vectors=True)"
             )
     if exclude_self:
-        _check_self_exclusion_types(
-            queries.schema[query_id_col].dataType, _id_field(m).dataType
+        # exclude_self compares the query-id column against the index
+        # id column: an incompatible pair fails loudly up front instead
+        # of null-dropping every candidate (non-ANSI) or throwing
+        # mid-job (ANSI)
+        check_self_exclusion_types(
+            queries.schema[query_id_col].dataType,
+            _id_field(m).dataType,
+            "ann_index_topk: exclude_self=True",
         )
     q_rows = queries.select(
         F.col(query_id_col).alias("query_id"),
@@ -1645,10 +831,9 @@ def ann_index_topk(
     )
 
     probed_cells = sorted({c for cells in probes for c in cells})
-    fs = vs.fs
-    live = [s for s in m["segments"] if fs.list_files(f"{path}/{s}")]
+    coded = _BI.visible_rows(spark, path, m, id_col)
     id_field = _id_field(m)
-    if not live:
+    if coded is None:
         from pyspark.sql import types as T
 
         return spark.createDataFrame(
@@ -1669,26 +854,15 @@ def ann_index_topk(
             ),
         )
     # the isin filter is a LITERAL predicate on the partition column,
-    # so every segment scan prunes to the probed directories at
-    # planning time (PartitionFilters, locked by test); pending
-    # tombstones apply per segment (version-scoped, broadcast)
-    batches = _ann_delete_batches(spark, path, m, id_col)
-    scans = [
-        _ann_visible_scan(spark, path, s, batches, id_col).filter(
-            F.col("cell").isin(probed_cells)
-        )
-        for s in live
-    ]
-    coded = reduce(DataFrame.unionByName, scans)
+    # pushed through the union and the per-segment tombstone
+    # anti-joins, so every segment scan prunes to the probed
+    # directories at planning time (PartitionFilters, locked by test)
+    coded = coded.filter(F.col("cell").isin(probed_cells))
     if allowed_ids is not None:
         # BEFORE the probe join and ranking: a literal id list pushes
         # through the union into each segment's parquet scan
         # (PushedFilters); a DataFrame semi-joins. The refine path
         # below reads its exact vectors from this same filtered scan.
-        from parq_tools_spark.operators._index_common import (
-            apply_allowed_ids,
-        )
-
         coded = apply_allowed_ids(
             coded, id_col, allowed_ids, id_field.dataType,
             "ann_index_topk",
@@ -1734,10 +908,6 @@ def ann_index_topk(
     # scale-invariant, matching brute_force_topk), re-ranked
     from pyspark.sql import types as T
 
-    from parq_tools_spark.operators.similarity import (
-        cosine_similarity_col,
-    )
-
     adc_top = (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= refine)
@@ -1782,21 +952,6 @@ def ann_index_topk(
     )
 
 
-def _check_self_exclusion_types(query_type, index_type) -> None:
-    """Shared guard (see :func:`_index_common.check_self_exclusion_types`):
-    exclude_self compares the query-id column against the index id
-    column — incompatible pairs fail loudly up front instead of
-    silently null-dropping every candidate (non-ANSI) or throwing
-    mid-job (ANSI)."""
-    from parq_tools_spark.operators._index_common import (
-        check_self_exclusion_types,
-    )
-
-    check_self_exclusion_types(
-        query_type, index_type, "ann_index_topk: exclude_self=True"
-    )
-
-
 def _probe_schema(queries: DataFrame, query_id_col: str):
     from pyspark.sql import types as T
 
@@ -1816,10 +971,6 @@ def _assign_frozen_cells(
     _with_centroid_cells` arithmetic the segments were encoded with
     (same rounded cosine, same lower-cell ties), so a batch row and
     its indexed copy can never land in different cells."""
-    from parq_tools_spark.operators.similarity import (
-        _with_centroid_cells,
-    )
-
     p = m["params"]
     centroids, _, _ = _read_model(_ann_vs(spark, path).fs, path, m)
     return _with_centroid_cells(
@@ -1868,10 +1019,6 @@ def _semantic_in_batch_drops(
     get the batch operator's drop set for that batch).
     Both sides are the micro-batch: a broadcast self-join on the cell
     key, never a shuffle of anything corpus-sized."""
-    from parq_tools_spark.operators.similarity import (
-        cosine_similarity_col,
-    )
-
     a = assigned.alias("a")
     b = assigned.alias("b")
     rounded = (
@@ -1945,13 +1092,8 @@ def semantic_dedupe_bootstrap(
     over a live index would silently drop its admitted corpus from
     every future admission decision (rebuild deliberately with
     :func:`ann_index_build` instead)."""
-    from parq_tools_spark.operators.similarity import (
-        _hashseed_rows,
-        _with_centroid_cells,
-    )
-
     spark = batch.sparkSession
-    if _ann_vs(spark, index_path).current() is not None:
+    if _BI.committed(INDEX_FAMILY, spark, index_path):
         raise ValueError(
             f"semantic_dedupe_bootstrap: an ann index already exists "
             f"at {index_path}; bootstrap seeds a NEW admission corpus "
@@ -1964,10 +1106,6 @@ def semantic_dedupe_bootstrap(
     # cell-assignment pass + eager checkpoint below
     _check_batch_size(batch, max_batch_rows, "semantic_dedupe_bootstrap")
     if store_cols:
-        from parq_tools_spark.operators._index_common import (
-            check_store_cols,
-        )
-
         # metadata stored from batch 1, so a where=-scoped admission
         # stream can cold-start on this bootstrap with no pre-build
         check_store_cols(
@@ -2093,13 +1231,7 @@ def semantic_dedupe_incremental(
     :func:`ann_index_upsert` (tombstone-then-add), so the replayed
     append converges instead of double-inserting.
     """
-    from functools import reduce
-
-    from parq_tools_spark.operators.similarity import (
-        cosine_similarity_col,
-    )
-
-    vs, cur, m = _ann_manifest(spark, index_path)
+    _, _, m = _ann_manifest(spark, index_path)
     p = m["params"]
     if not p.get("store_vectors"):
         raise ValueError(
@@ -2109,10 +1241,6 @@ def semantic_dedupe_incremental(
             "ann_index_build(..., store_vectors=True)"
         )
     id_col, vec_col = p["id_col"], p["vec_col"]
-    from parq_tools_spark.operators._index_common import (
-        check_self_exclusion_types,
-    )
-
     check_self_exclusion_types(
         new_vecs.schema[id_col].dataType,
         _id_field(m).dataType,
@@ -2123,23 +1251,7 @@ def semantic_dedupe_incremental(
             "on the batch's id type)."
         ),
     )
-    # validate/compile the where predicate UP FRONT (the shared
-    # where= contract: identical errors on empty and non-empty
-    # indexes, loud on a store_cols-less index)
-    where_col = None
-    if where is not None:
-        from parq_tools_spark.plans.query_parser import (
-            build_filter_expression,
-        )
-
-        stored = p.get("store_cols", [])
-        if not stored:
-            raise ValueError(
-                f"ann index at {index_path} stores no metadata "
-                "columns; where= needs an index built with "
-                "ann_index_build(..., store_cols=[...])"
-            )
-        where_col = build_filter_expression(where, columns=stored)
+    where_col = _BI.compile_where(INDEX_FAMILY, index_path, p, where)
     thr = float(threshold)
     scale = float(10 ** p["round_to"])
 
@@ -2156,42 +1268,29 @@ def semantic_dedupe_incremental(
         r.cell for r in assigned.select("cell").distinct().collect()
     ]
 
-    fs = vs.fs
-    live = [
-        s for s in m["segments"] if fs.list_files(f"{index_path}/{s}")
-    ]
     dup_ids = _semantic_in_batch_drops(
         assigned, id_col, vec_col, thr, scale
     )
-    if live and touched:
-        batches = _ann_delete_batches(spark, index_path, m, id_col)
+    rows = (
+        _BI.visible_rows(spark, index_path, m, id_col) if touched else None
+    )
+    if rows is not None:
         # literal cell predicate => planning-time partition pruning:
         # only the batch's touched cell= directories are read
-        def _seg_scan(s):
-            scan = _ann_visible_scan(
-                spark, index_path, s, batches, id_col
-            ).filter(F.col("cell").isin(touched))
-            if where_col is not None:
-                # metadata scope BEFORE the alias-select drops the
-                # stored columns — pushed into the cell-pruned scan
-                scan = scan.filter(where_col)
-            return scan.select(
-                F.col(id_col).alias("_idx_id"),
-                F.col("cell").alias("_idx_cell"),
-                F.col("vec").alias("_idx_vec"),
-            )
-
-        idx = reduce(
-            DataFrame.unionByName, [_seg_scan(s) for s in live]
+        scan = rows.filter(F.col("cell").isin(touched))
+        if where_col is not None:
+            # metadata scope BEFORE the alias-select drops the stored
+            # columns — pushed into the cell-pruned scans
+            scan = scan.filter(where_col)
+        idx = scan.select(
+            F.col(id_col).alias("_idx_id"),
+            F.col("cell").alias("_idx_cell"),
+            F.col("vec").alias("_idx_vec"),
         )
         if allowed_ids is not None:
             # scope WHO MAY BLOCK, before the dup join: a literal
             # list pushes into the (already cell-pruned) segment
             # scans, a DataFrame semi-joins
-            from parq_tools_spark.operators._index_common import (
-                apply_allowed_ids,
-            )
-
             if isinstance(allowed_ids, DataFrame) and id_col in (
                 allowed_ids.columns
             ):
@@ -2228,10 +1327,6 @@ def semantic_dedupe_incremental(
         F.broadcast(dup_ids), on=id_col, how="left_anti"
     )
     if update_index:
-        from parq_tools_spark.operators._index_common import (
-            check_store_cols,
-        )
-
         check_store_cols(
             survivors, p.get("store_cols", []),
             "semantic_dedupe_incremental(update_index=True)",

@@ -1147,10 +1147,10 @@ def minhash_pairs_between(
 _PARAMS_FILE = "_minhash_params.json"
 
 
-def _minhash_band_rows(df, p: dict, text_col: str, meta_cols) -> DataFrame:
+def _minhash_band_rows(df, p: dict, text_col: str, _model) -> DataFrame:
     return banded_minhash(
         df, p["id_col"], text_col, p["num_hashes"], p["bands"], p["k"],
-        p["hash_family"], meta_cols=meta_cols,
+        p["hash_family"], meta_cols=p.get("store_cols", []),
     )
 
 
@@ -1186,12 +1186,12 @@ def _minhash_manifest_params(spark, path: str, vs, m) -> dict:
 
 #: The MinHash band-row family: ``(id, *store_cols, signature, band,
 #: bhash)`` rows under ``_index_manifest.json`` commits.
-BAND_FAMILY = _BI.BandFamily(
+BAND_FAMILY = _BI.IndexFamily(
     family="minhash",
     module=__name__,
     marker=INDEX_MARKERS["minhash"],
     reserved=("signature", "band", "bhash"),
-    band_rows=_minhash_band_rows,
+    encode=_minhash_band_rows,
     params=_minhash_manifest_params,
     dup_note=" (a duplicate would append two signature sets for one id)",
 )

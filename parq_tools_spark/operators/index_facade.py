@@ -10,14 +10,15 @@ it (same defaults, same semantics, nothing re-implemented here).
 
 What the families share: every family follows one PROTOCOL
 (``_index_common.py`` — generation tags, version-scoped tombstones,
-manifest resolution, the CDC and metadata contracts). The two
-band-row families, MinHash and SimHash, also share one
-IMPLEMENTATION: their data models are the same (band rows), so every
+manifest resolution, the CDC and metadata contracts). Three of them
+— MinHash and SimHash (band rows) and ANN (PQ code rows plus a
+model file) — also share one IMPLEMENTATION: their data models are
+rows in int-partitioned segments (``band=``/``cell=``), so every
 lifecycle op exists once in ``_band_index.py``, and each family's
-public ``*_index_<op>`` names are that op bound to the family's spec.
+public ``*_index_<op>`` names are that op bound to the family's spec
+(ANN's through short wrappers that keep its own parameter names).
 This facade takes their operation tables from those specs. BM25
-(postings + term snapshots) and ANN (PQ codes + a model file) still
-implement the lifecycle per family.
+(postings + term snapshots) still implements the lifecycle itself.
 
 The facade is the read-side convenience for code that holds a path
 and doesn't know — or care — which family wrote it: maintenance jobs
@@ -41,23 +42,12 @@ __all__ = ["open_index", "IndexHandle", "INDEX_MARKERS"]
 def _ops(family: str) -> dict:
     """The family's function table, imported lazily (the facade must
     not drag all four modules in for one handle)."""
+    from parq_tools_spark.operators._band_index import op_table
+
     if family == "ann":
         from parq_tools_spark.operators import ann_index as m
 
-        return {
-            "query": m.ann_index_topk,
-            "stats": m.ann_index_stats,
-            "add": m.ann_index_add,
-            "delete": m.ann_index_delete,
-            "upsert": m.ann_index_upsert,
-            "apply_cdc": m.ann_index_apply_cdc,
-            "compact": m.ann_index_compact,
-            "maybe_compact": m.ann_index_maybe_compact,
-            "retrain": m.ann_index_retrain,
-            "update_metadata": m.ann_index_update_metadata,
-            "add_metadata_col": m.ann_index_add_metadata_col,
-            "drop_metadata_col": m.ann_index_drop_metadata_col,
-        }
+        return {**op_table(m.INDEX_FAMILY), "retrain": m.ann_index_retrain}
     if family == "bm25":
         from parq_tools_spark.operators import search as m
 
@@ -74,8 +64,6 @@ def _ops(family: str) -> dict:
             "add_metadata_col": m.bm25_index_add_metadata_col,
             "drop_metadata_col": m.bm25_index_drop_metadata_col,
         }
-    from parq_tools_spark.operators._band_index import op_table
-
     if family == "minhash":
         from parq_tools_spark.operators.dedup import BAND_FAMILY
     else:

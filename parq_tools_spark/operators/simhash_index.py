@@ -133,21 +133,21 @@ def _banded_simhash(
     ).select(id_col, *meta_cols, "simhash", "bk.band", "bk.bval")
 
 
-def _simhash_band_rows(df, p: dict, text_col: str, meta_cols) -> DataFrame:
+def _simhash_band_rows(df, p: dict, text_col: str, _model) -> DataFrame:
     return _banded_simhash(
         df, p["id_col"], text_col, p["bits"], p["n_bands"],
-        p["hash_family"], meta_cols=meta_cols,
+        p["hash_family"], meta_cols=p.get("store_cols", []),
     )
 
 
 #: The SimHash band-row family: ``(id, *store_cols, simhash, band,
 #: bval)`` rows under ``_simhash_manifest.json`` commits.
-BAND_FAMILY = _BI.BandFamily(
+BAND_FAMILY = _BI.IndexFamily(
     family="simhash",
     module=__name__,
     marker=INDEX_MARKERS["simhash"],
     reserved=("simhash", "band", "bval"),
-    band_rows=_simhash_band_rows,
+    encode=_simhash_band_rows,
 )
 
 

@@ -301,16 +301,15 @@ def start_ann_index_stream(
             "operators.ann_index.ann_index_apply_cdc for batch CDC"
         )
 
+    from parq_tools_spark.operators import _band_index as _BI
+    from parq_tools_spark.operators.ann_index import INDEX_FAMILY
+
     def _apply(spark, batch_df: DataFrame) -> None:
         from pyspark.sql import functions as F
 
-        from parq_tools_spark.operators.ann_index import (
-            _ann_vs,
-            ann_index_apply_cdc,
-            ann_index_build,
-        )
+        from parq_tools_spark.operators.ann_index import ann_index_build
 
-        if _ann_vs(spark, index_path).current() is None:
+        if not _BI.committed(INDEX_FAMILY, spark, index_path):
             from parq_tools_spark.operators._index_common import (
                 check_store_cols,
                 resolve_cdc_with_meta,
@@ -349,35 +348,27 @@ def start_ann_index_stream(
             # through apply_cdc where the 'M's would apply — dropping
             # them here would make final state depend on crash timing
             if metas is not None and metas.take(1):
-                ann_index_apply_cdc(
-                    spark, index_path, metas,
+                _BI.apply_cdc(
+                    INDEX_FAMILY, spark, index_path, metas,
                     op_col=op_col, seq_col=seq_col,
                 )
             return
-        ann_index_apply_cdc(
-            spark, index_path, batch_df, op_col=op_col, seq_col=seq_col
+        _BI.apply_cdc(
+            INDEX_FAMILY, spark, index_path, batch_df,
+            op_col=op_col, seq_col=seq_col,
         )
 
     def _compact(spark, path):
-        from parq_tools_spark.operators.ann_index import (
-            _ann_vs,
-            ann_index_compact,
-        )
-
         # a delete-only bootstrap batch commits no index (all no-ops);
         # compacting nothing must be a no-op too, not a crash loop
         # (the batch would fail un-marked and replay forever)
-        if _ann_vs(spark, path).current() is None:
-            return
-        ann_index_compact(spark, path)
+        if _BI.committed(INDEX_FAMILY, spark, path):
+            _BI.compact(INDEX_FAMILY, spark, path)
 
     def _maybe(spark):
-        from parq_tools_spark.operators.ann_index import (
-            ann_index_maybe_compact,
-        )
-
-        # maybe_compact itself no-ops on an uncommitted index
-        ann_index_maybe_compact(
+        # the trigger itself no-ops on an uncommitted index
+        _BI.compact_when(
+            INDEX_FAMILY,
             spark,
             index_path,
             max_segments=max_segments,

@@ -357,22 +357,21 @@ def start_semantic_dedupe_stream(
     # start_near_dedupe_stream)
     allowed_ids = normalize_allowed_ids(allowed_ids)
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from parq_tools_spark.operators.ann_index import (
-            _ann_vs,
-            ann_index_compact,
-            ann_index_maybe_compact,
-            semantic_dedupe_bootstrap,
-            semantic_dedupe_incremental,
-        )
+    from parq_tools_spark.operators import _band_index as _BI
+    from parq_tools_spark.operators.ann_index import (
+        INDEX_FAMILY,
+        semantic_dedupe_bootstrap,
+        semantic_dedupe_incremental,
+    )
 
+    def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if batch_id <= _last_applied(spark, index_path, checkpoint_dir):
             return  # replay of a batch this query already applied
         if not batch_df.take(1):
             _commit_marker(spark, index_path, checkpoint_dir, batch_id)
             return
-        if _ann_vs(spark, index_path).current() is None:
+        if not _BI.committed(INDEX_FAMILY, spark, index_path):
             # first non-empty batch: freeze the model on the FULL
             # batch, within-batch lower-id rule under it, ONE atomic
             # manifest commit of only the survivors — the whole
@@ -407,13 +406,14 @@ def start_semantic_dedupe_stream(
         )
         _commit_marker(spark, index_path, checkpoint_dir, batch_id)
         if compact_every and (batch_id + 1) % compact_every == 0:
-            ann_index_compact(spark, index_path)
+            _BI.compact(INDEX_FAMILY, spark, index_path)
         elif max_segments or max_tombstone_frac:
             # stats-driven: compacts exactly when the manifest's own
             # fragmentation signals cross their bounds (see
             # ann_index_maybe_compact); best-effort after the marker,
             # the same rationale as compact_every here
-            ann_index_maybe_compact(
+            _BI.compact_when(
+                INDEX_FAMILY,
                 spark,
                 index_path,
                 max_segments=max_segments,

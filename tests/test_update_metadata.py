@@ -319,8 +319,8 @@ def test_update_metadata_facade_dispatch(spark, docs, tmp_path):
 
 
 def test_band_update_metadata_equals_fresh_build(spark, docs, tmp_path):
-    """MinHash/SimHash metadata-only updates (shared
-    update_band_metadata): post-update where= pairs equal an index
+    """MinHash/SimHash metadata-only updates (the shared
+    _band_index.update_metadata): post-update where= pairs equal an index
     built over the flipped corpus; band-row signatures/fingerprints
     are never recomputed (old segment files untouched)."""
     from parq_tools_spark.operators.dedup import (

@@ -13,7 +13,9 @@ $sf_dir (default /root/testdata/sf0.01) and prints one line per op:
     <op>  jobs=<n>  wall=<sec>
 The op itself runs inside a unique job group; jobs are counted via
 StatusTracker.getJobIdsForGroup, so setup/teardown jobs outside the
-timed region are excluded.
+timed region are excluded. Jobs an op submits from its own worker
+threads (compaction's overlapped per-partition rewrites) carry no job
+group, so the ungrouped jobs that appear during the op count too.
 """
 
 from __future__ import annotations
@@ -47,12 +49,15 @@ def main() -> int:
         if ONLY and name not in ONLY:
             return
         group = f"cj_{name}_{time.monotonic_ns()}"
+        tracker = sc.statusTracker()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
         sc.setJobGroup(group, name)
         t0 = time.perf_counter()
         fn()
         wall = time.perf_counter() - t0
         sc.setJobGroup(None, None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        jobs = set(tracker.getJobIdsForGroup(group))
+        jobs |= set(tracker.getJobIdsForGroup(None)) - ungrouped
         print(f"RESULT {name} jobs={len(jobs)} wall={wall:.3f}", flush=True)
 
     tmp = tempfile.mkdtemp(prefix="count_jobs_")
@@ -113,9 +118,12 @@ def main() -> int:
         # ---------------- ANN ----------------
         from parq_tools_spark.operators.ann_index import (
             ann_index_add,
+            ann_index_add_metadata_col,
             ann_index_apply_cdc,
             ann_index_build,
+            ann_index_compact,
             ann_index_delete,
+            ann_index_drop_metadata_col,
             ann_index_update_metadata,
             ann_index_upsert,
         )
@@ -153,6 +161,22 @@ def main() -> int:
         measure(
             "ann_update_metadata",
             lambda: ann_index_update_metadata(spark, ann, aflips),
+        )
+        # tombstones from the delete, CDC, upsert and metadata ops above
+        # are still pending, so compaction folds them (not a no-op)
+        measure("ann_compact", lambda: ann_index_compact(spark, ann))
+        ascores = emb.select(
+            "vec_id", (F.col("vec_id") % 7).cast("int").alias("score")
+        )
+        measure(
+            "ann_add_metadata_col",
+            lambda: ann_index_add_metadata_col(
+                spark, ann, ascores, default=0
+            ),
+        )
+        measure(
+            "ann_drop_metadata_col",
+            lambda: ann_index_drop_metadata_col(spark, ann, "score"),
         )
 
         # ---------------- MinHash ----------------

@@ -46,6 +46,33 @@ QUERIES = [
 ]
 
 
+def execution_ids(store) -> set:
+    execs = store.executionsList()
+    return {execs.apply(i).executionId() for i in range(execs.size())}
+
+
+def write_execution(store, before: set) -> int:
+    """The id of the noop write's own SQL execution: the one ROOT
+    execution (not a nested subquery/broadcast execution) that
+    appeared since ``before`` was taken. The last entry of
+    ``executionsList()`` is not reliably it — a nested execution, or
+    one from another thread of the session, can be listed after it."""
+    for _ in range(50):
+        new = sorted(execution_ids(store) - before)
+        roots = [
+            e for e in new
+            if store.execution(e).get().rootExecutionId() == e
+        ]
+        if roots:
+            if len(roots) > 1:
+                raise RuntimeError(
+                    f"expected one new root SQL execution, got {roots}"
+                )
+            return roots[0]
+        time.sleep(0.2)  # the status listener has not caught up yet
+    raise RuntimeError("the noop write's SQL execution never appeared")
+
+
 def node_rows(store, eid):
     """(node_id, node_name, metric_name, value) for the row/record
     metrics of the execution's Exchange/WindowGroupLimit nodes."""
@@ -87,10 +114,9 @@ def main() -> int:
                 "spark.sql.optimizer.windowGroupLimitThreshold", threshold
             )
         out = bm25_topk_batch(docs, qdf, k=10)
+        before = execution_ids(store)
         out.write.format("noop").mode("overwrite").save()
-        execs = store.executionsList()
-        eid = execs.apply(execs.size() - 1).executionId()
-        rows = node_rows(store, eid)
+        rows = node_rows(store, write_execution(store, before))
         plan_str = out._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted"
         )
